@@ -7,13 +7,17 @@ must provide for that policy to be correct across processes (and, with
 a server-backed implementation, across machines).
 
 The reference accepts only a Redis broker for multi-worker deployments
-(cmd/init.go:200-229); the file-SQLite backend here covers
-multi-process-single-host (VERDICT r04: SQLite-over-NFS is NOT a safe
-substitute for multi-machine). This seam is what makes a
-Postgres/Redis backend a drop-in: implement ``BrokerBackend``, pass it
-as ``JobStore(backend=...)``, and inherit the contract test class
-(tests/test_broker_contract.py ``BrokerContract``) to prove the
-atomicity obligations hold.
+(cmd/init.go:200-229). Here one SQL implementation, ``DBAPIBroker``,
+covers every SQL store: a SQLite file for multi-process-single-host
+(``SqliteBroker`` is only its constructor for a path; SQLite-over-NFS
+is NOT a safe substitute for multi-machine), the same file served over
+TCP by ``netdbapi``, or a served Postgres. Because all of them use the
+one ``db_jobs``/``db_groups`` schema, a ``job_store = path`` server and
+workers reaching that file through a DBAPI factory share one backlog.
+This seam is what makes a Redis backend a drop-in: implement
+``BrokerBackend``, pass it as ``JobStore(backend=...)``, and inherit
+the contract test class (tests/test_broker_contract.py
+``BrokerContract``) to prove the atomicity obligations hold.
 
 Obligations (enforced by the contract tests):
 
@@ -135,233 +139,19 @@ class BrokerBackend(ABC):
     def close(self) -> None: ...
 
 
-class SqliteBroker(BrokerBackend):
-    """File-SQLite backend: single-host, multi-process.
-
-    WAL + busy_timeout make sibling-process access safe; BEGIN
-    IMMEDIATE takes the writer lock for every atomic section. Rows are
-    the JSON of the JobRecord dataclass keyed by job_id — schema
-    evolution is adding dataclass fields with defaults.
-    """
-
-    def __init__(self, path: str) -> None:
-        # Autocommit (isolation_level=None) so the explicit BEGIN
-        # IMMEDIATE transactions own their boundaries.
-        self._db = sqlite3.connect(
-            path, check_same_thread=False, isolation_level=None
-        )
-        self._db.execute("PRAGMA journal_mode=WAL")
-        self._db.execute("PRAGMA busy_timeout=10000")
-        self._db.execute(
-            "CREATE TABLE IF NOT EXISTS jobs (job_id TEXT PRIMARY KEY, data TEXT)"
-        )
-        self._db.execute(
-            "CREATE TABLE IF NOT EXISTS groups (group_id TEXT PRIMARY KEY, job_ids TEXT)"
-        )
-
-    # -- helpers ------------------------------------------------------
-    def _write(self, rec: "JobRecord") -> None:
-        self._db.execute(
-            "INSERT OR REPLACE INTO jobs (job_id, data) VALUES (?, ?)",
-            (rec.job_id, json.dumps(asdict(rec))),
-        )
-
-    def _row(self, job_id: str) -> "JobRecord | None":
-        row = self._db.execute(
-            "SELECT data FROM jobs WHERE job_id = ?", (job_id,)
-        ).fetchone()
-        return None if row is None else _record(row[0])
-
-    def _txn(self):
-        self._db.execute("BEGIN IMMEDIATE")
-
-    # -- BrokerBackend ------------------------------------------------
-    def check_and_put(
-        self, rec: "JobRecord", active_states: tuple[str, ...]
-    ) -> "JobRecord | None":
-        self._txn()
-        try:
-            existing = self._row(rec.job_id)
-            if existing is not None and existing.state in active_states:
-                self._db.execute("COMMIT")
-                return existing
-            self._write(rec)
-            self._db.execute("COMMIT")
-        except BaseException:
-            self._db.execute("ROLLBACK")
-            raise
-        return None
-
-    def get(self, job_id: str) -> "JobRecord | None":
-        return self._row(job_id)
-
-    def mutate(
-        self, job_id: str, fn: Callable[["JobRecord"], None]
-    ) -> "JobRecord | None":
-        self._txn()
-        try:
-            rec = self._row(job_id)
-            if rec is not None:
-                fn(rec)
-                self._write(rec)
-            self._db.execute("COMMIT")
-        except BaseException:
-            self._db.execute("ROLLBACK")
-            raise
-        return rec
-
-    def claim(
-        self, queues: list[str], owner: str, now: float, lease: float
-    ) -> "JobRecord | None":
-        marks = ",".join("?" for _ in queues)
-        lease_clause = (
-            """
-            OR (json_extract(data, '$.state') = 'STARTED'
-                AND json_extract(data, '$.owner') <> ''
-                AND COALESCE(json_extract(data, '$.heartbeat_at'), 0)
-                    <= ? - ?)
-            """
-            if lease > 0
-            else ""
-        )
-        lease_args = (now, lease) if lease > 0 else ()
-        select_sql = f"""
-            SELECT data FROM jobs
-            WHERE json_extract(data, '$.queue') IN ({marks})
-              AND NOT json_extract(data, '$.cancelled')
-              AND (json_extract(data, '$.eta') IS NULL
-                   OR json_extract(data, '$.eta') <= ?)
-              AND ((json_extract(data, '$.state') IN ('PENDING', 'RETRY')
-                    AND json_extract(data, '$.owner') = '')
-                   {lease_clause})
-            ORDER BY json_extract(data, '$.created_at')
-            LIMIT 1
-            """
-        select_args = (*queues, now, *lease_args)
-        # Idle fast path: a plain read (WAL: no writer lock) before
-        # paying for BEGIN IMMEDIATE. Claim pools poll continuously
-        # across every process; an empty backlog must not serialize
-        # them on the writer lock. The candidate is re-checked inside
-        # the transaction, so the handoff stays exact.
-        if self._db.execute(select_sql, select_args).fetchone() is None:
-            return None
-        self._txn()
-        try:
-            row = self._db.execute(select_sql, select_args).fetchone()
-            if row is None:  # lost the race to another claimer
-                self._db.execute("COMMIT")
-                return None
-            rec = _record(row[0])
-            rec.owner = owner
-            rec.state = "STARTED"  # jobstore.STARTED (SQL above matches)
-            rec.heartbeat_at = now
-            self._write(rec)
-            self._db.execute("COMMIT")
-        except BaseException:
-            self._db.execute("ROLLBACK")
-            raise
-        return rec
-
-    def heartbeat(self, owner: str, now: float) -> None:
-        self._db.execute(
-            """
-            UPDATE jobs
-            SET data = json_set(data, '$.heartbeat_at', ?)
-            WHERE json_extract(data, '$.owner') = ?
-              AND json_extract(data, '$.state') = 'STARTED'
-            """,
-            (now, owner),
-        )
-
-    def delete(self, job_id: str) -> None:
-        self._db.execute("DELETE FROM jobs WHERE job_id = ?", (job_id,))
-
-    def scan(self) -> list["JobRecord"]:
-        # fetchall() first: callers mutate while walking, and REPLACE
-        # is delete+reinsert — a live cursor could skip/revisit rows.
-        return [
-            _record(data)
-            for (data,) in self._db.execute("SELECT data FROM jobs").fetchall()
-        ]
-
-    def pending(self, queue: str) -> list["JobRecord"]:
-        return [
-            _record(data)
-            for (data,) in self._db.execute(
-                """
-                SELECT data FROM jobs
-                WHERE json_extract(data, '$.queue') = ?
-                  AND json_extract(data, '$.state') = 'PENDING'
-                ORDER BY json_extract(data, '$.created_at')
-                """,
-                (queue,),
-            )
-        ]
-
-    def counts_by_state(self) -> dict[str, int]:
-        return {
-            state: n
-            for state, n in self._db.execute(
-                "SELECT json_extract(data, '$.state'), COUNT(*) FROM jobs GROUP BY 1"
-            )
-        }
-
-    def expired(self, now: float) -> list["JobRecord"]:
-        return [
-            _record(data)
-            for (data,) in self._db.execute(
-                """
-                SELECT data FROM jobs
-                WHERE json_extract(data, '$.state') IN ('SUCCESS', 'FAILURE')
-                  AND json_extract(data, '$.ttl') > 0
-                  AND json_extract(data, '$.result_path') <> ''
-                  AND json_extract(data, '$.finished_at') IS NOT NULL
-                  AND json_extract(data, '$.finished_at')
-                      + json_extract(data, '$.ttl') <= ?
-                """,
-                (now,),
-            )
-        ]
-
-    # -- groups -------------------------------------------------------
-    def put_group(self, group_id: str, job_ids: list[str]) -> None:
-        self._db.execute(
-            "INSERT OR REPLACE INTO groups (group_id, job_ids) VALUES (?, ?)",
-            (group_id, json.dumps(list(job_ids))),
-        )
-
-    def get_group(self, group_id: str) -> list[str] | None:
-        row = self._db.execute(
-            "SELECT job_ids FROM groups WHERE group_id = ?", (group_id,)
-        ).fetchone()
-        return None if row is None else list(json.loads(row[0]))
-
-    def scan_groups(self) -> dict[str, list[str]]:
-        return {
-            gid: json.loads(ids)
-            for gid, ids in self._db.execute(
-                "SELECT group_id, job_ids FROM groups"
-            ).fetchall()
-        }
-
-    def delete_group(self, group_id: str) -> None:
-        self._db.execute("DELETE FROM groups WHERE group_id = ?", (group_id,))
-
-    def close(self) -> None:
-        self._db.close()
-
-
 class DBAPIBroker(BrokerBackend):
-    """Generic DBAPI-2.0 backend: the multi-machine broker.
+    """Generic DBAPI-2.0 backend: every SQL job store.
 
-    Works over any DBAPI connection factory — ``sqlite3.connect`` for
-    tests/single-host, ``psycopg2.connect`` for a real served
-    Postgres, where every machine in a worker fleet points at the same
-    database. Hot fields live in real indexed columns (state, owner,
-    queue, heartbeat) so claim/pending/expired run as plain SQL over
-    any engine; the full record rides along as a JSON document that is
-    rewritten on every row mutation (columns overlay the JSON on read,
-    so the column-only fast paths — heartbeat — never go stale).
+    Works over any DBAPI connection factory — ``sqlite3_dbapi_connect``
+    for a single-host file (``SqliteBroker``), ``netdbapi.connect``
+    for that file served over TCP, ``psycopg2.connect`` for a real
+    served Postgres, where every machine in a worker fleet points at
+    the same database. Hot fields live in real indexed columns (state,
+    owner, queue, heartbeat) so claim/pending/expired run as plain SQL
+    over any engine; the full record rides along as a JSON document
+    that is rewritten on every row mutation (columns overlay the JSON
+    on read, so the column-only fast paths — heartbeat — never go
+    stale).
 
     Dialect differences are confined to two knobs:
 
@@ -374,7 +164,9 @@ class DBAPIBroker(BrokerBackend):
       delivery path the reference gets from Redis.
 
     sqlite factories must pass ``isolation_level=None`` (autocommit)
-    so the explicit BEGIN IMMEDIATE owns its transaction. Validated
+    so the explicit BEGIN IMMEDIATE owns its transaction. On sqlite,
+    opening a file the earlier JSON-blob store wrote upgrades it once
+    (``_upgrade_blob_tables``). Validated
     end-to-end by the ``BrokerContract`` suite
     (tests/test_broker_contract.py) over the sqlite3 driver; the
     postgresql dialect changes only the SQL strings noted above.
@@ -418,6 +210,67 @@ class DBAPIBroker(BrokerBackend):
             """
         )
         self._db.commit()
+        if not self._pg:
+            self._upgrade_blob_tables()
+
+    def _upgrade_blob_tables(self) -> None:
+        """Move a file written by the earlier JSON-blob store (tables
+        ``jobs(job_id, data)`` and ``groups(group_id, job_ids)``) into
+        ``db_jobs``/``db_groups``, once. The old tables are re-checked
+        under the writer lock, so processes opening one old file at
+        the same time upgrade it exactly once."""
+        cur = self._db.cursor()
+
+        def old_tables() -> set[str]:
+            cur.execute(
+                "SELECT name FROM sqlite_master "
+                "WHERE type = 'table' AND name IN ('jobs', 'groups')"
+            )
+            return {name for (name,) in cur.fetchall()}
+
+        if not old_tables():
+            self._db.commit()
+            return
+        try:
+            cur.execute("BEGIN IMMEDIATE")
+            old = old_tables()
+            if "jobs" in old:
+                # reaps_at: the same rule as _reaps_at
+                cur.execute(
+                    f"""
+                    INSERT OR IGNORE INTO db_jobs ({self._COLS})
+                    SELECT job_id, queue, state, owner, cancelled, eta,
+                           created_at, heartbeat_at,
+                           CASE WHEN state IN ('SUCCESS', 'FAILURE')
+                                 AND ttl > 0 AND result_path <> ''
+                                 AND finished_at IS NOT NULL
+                                THEN finished_at + ttl END,
+                           data
+                    FROM (SELECT job_id, data,
+                            json_extract(data, '$.queue') AS queue,
+                            json_extract(data, '$.state') AS state,
+                            json_extract(data, '$.owner') AS owner,
+                            json_extract(data, '$.cancelled') AS cancelled,
+                            json_extract(data, '$.eta') AS eta,
+                            json_extract(data, '$.created_at') AS created_at,
+                            json_extract(data, '$.heartbeat_at') AS heartbeat_at,
+                            json_extract(data, '$.ttl') AS ttl,
+                            json_extract(data, '$.result_path') AS result_path,
+                            json_extract(data, '$.finished_at') AS finished_at
+                          FROM jobs)
+                    """
+                )
+                cur.execute("DROP TABLE jobs")
+            if "groups" in old:
+                cur.execute(
+                    "INSERT OR IGNORE INTO db_groups (group_id, job_ids) "
+                    "SELECT group_id, job_ids FROM groups"
+                )
+                cur.execute("DROP TABLE groups")
+            self._db.commit()
+        except BaseException:
+            self._db.rollback()
+            raise
 
     # -- helpers ------------------------------------------------------
     def _q(self, sql: str) -> str:
@@ -480,12 +333,33 @@ class DBAPIBroker(BrokerBackend):
     _COLS = ("job_id, queue, state, owner, cancelled, eta, created_at, "
              "heartbeat_at, reaps_at, data")
 
-    def _select_row(self, cur, job_id: str, lock: bool):
+    def _select_row(self, cur, job_id: str):
+        """The row inside a write transaction (row-locked on pg)."""
         sql = f"SELECT {self._COLS} FROM db_jobs WHERE job_id = ?"
-        if lock and self._pg:
+        if self._pg:
             sql += " FOR UPDATE"
         cur.execute(self._q(sql), (job_id,))
         return cur.fetchone()
+
+    def _read(self, sql: str, args: tuple = ()) -> list:
+        """Rows of one plain read (on sqlite, closes the implicit read
+        transaction)."""
+        cur = self._db.cursor()
+        cur.execute(self._q(sql), args)
+        rows = cur.fetchall()
+        if not self._pg:
+            self._db.commit()
+        return rows
+
+    def _write(self, sql: str, args: tuple) -> None:
+        """One statement in a transaction of its own."""
+        cur = self._db.cursor()
+        try:
+            cur.execute(self._q(sql), args)
+            self._db.commit()
+        except BaseException:
+            self._db.rollback()
+            raise
 
     # -- BrokerBackend ------------------------------------------------
     def check_and_put(
@@ -494,7 +368,7 @@ class DBAPIBroker(BrokerBackend):
         cur = self._db.cursor()
         try:
             self._begin(cur)
-            row = self._select_row(cur, rec.job_id, lock=True)
+            row = self._select_row(cur, rec.job_id)
             if row is not None and row[2] in active_states:
                 self._db.commit()
                 return self._overlay(row)
@@ -506,11 +380,10 @@ class DBAPIBroker(BrokerBackend):
         return None
 
     def get(self, job_id: str) -> "JobRecord | None":
-        cur = self._db.cursor()
-        row = self._select_row(cur, job_id, lock=False)
-        if not self._pg:
-            self._db.commit()  # close the implicit read txn
-        return None if row is None else self._overlay(row)
+        rows = self._read(
+            f"SELECT {self._COLS} FROM db_jobs WHERE job_id = ?", (job_id,)
+        )
+        return self._overlay(rows[0]) if rows else None
 
     def mutate(
         self, job_id: str, fn: Callable[["JobRecord"], None]
@@ -518,7 +391,7 @@ class DBAPIBroker(BrokerBackend):
         cur = self._db.cursor()
         try:
             self._begin(cur)
-            row = self._select_row(cur, job_id, lock=True)
+            row = self._select_row(cur, job_id)
             rec = None
             if row is not None:
                 rec = self._overlay(row)
@@ -534,16 +407,23 @@ class DBAPIBroker(BrokerBackend):
         self, queues: list[str], owner: str, now: float, lease: float
     ) -> "JobRecord | None":
         marks = ",".join("?" for _ in queues)
-        lease_clause = (
-            "OR (state = 'STARTED' AND owner <> '' "
-            "    AND COALESCE(heartbeat_at, 0) <= ? - ?)"
-            if lease > 0
-            else ""
-        )
-        lease_args = (now, lease) if lease > 0 else ()
+        # The plain state list lets the index seek (queue, state): the
+        # OR below alone would leave SQLite reading every terminal row
+        # of the queue.
+        states = "'PENDING', 'RETRY'"
+        lease_clause = ""
+        lease_args: tuple[float, ...] = ()
+        if lease > 0:
+            states += ", 'STARTED'"
+            lease_clause = (
+                "OR (state = 'STARTED' AND owner <> '' "
+                "    AND COALESCE(heartbeat_at, 0) <= ? - ?)"
+            )
+            lease_args = (now, lease)
         select_sql = f"""
             SELECT {self._COLS} FROM db_jobs
             WHERE queue IN ({marks})
+              AND state IN ({states})
               AND cancelled = 0
               AND (eta IS NULL OR eta <= ?)
               AND ((state IN ('PENDING', 'RETRY') AND owner = '')
@@ -553,8 +433,11 @@ class DBAPIBroker(BrokerBackend):
             """
         args = (*queues, now, *lease_args)
         cur = self._db.cursor()
-        # Idle fast path (see SqliteBroker.claim): plain read first so
-        # an empty backlog never takes the writer/row lock.
+        # Idle fast path: a plain read (WAL: no writer lock) first.
+        # Claim pools poll continuously across every process; an empty
+        # backlog must not serialize them on the writer/row lock. The
+        # candidate is re-checked inside the transaction, so the
+        # handoff stays exact.
         cur.execute(self._q(select_sql), args)
         if cur.fetchone() is None:
             self._db.commit()
@@ -579,124 +462,73 @@ class DBAPIBroker(BrokerBackend):
         return rec
 
     def heartbeat(self, owner: str, now: float) -> None:
-        cur = self._db.cursor()
-        try:
-            cur.execute(
-                self._q(
-                    "UPDATE db_jobs SET heartbeat_at = ? "
-                    "WHERE owner = ? AND state = 'STARTED'"
-                ),
-                (now, owner),
-            )
-            self._db.commit()
-        except BaseException:
-            self._db.rollback()
-            raise
+        self._write(
+            "UPDATE db_jobs SET heartbeat_at = ? "
+            "WHERE owner = ? AND state = 'STARTED'",
+            (now, owner),
+        )
 
     def delete(self, job_id: str) -> None:
-        cur = self._db.cursor()
-        try:
-            cur.execute(
-                self._q("DELETE FROM db_jobs WHERE job_id = ?"), (job_id,)
-            )
-            self._db.commit()
-        except BaseException:
-            self._db.rollback()
-            raise
+        self._write("DELETE FROM db_jobs WHERE job_id = ?", (job_id,))
 
     def scan(self) -> list["JobRecord"]:
-        cur = self._db.cursor()
-        cur.execute(f"SELECT {self._COLS} FROM db_jobs")
-        rows = cur.fetchall()
-        if not self._pg:
-            self._db.commit()
-        return [self._overlay(r) for r in rows]
+        return [
+            self._overlay(r)
+            for r in self._read(f"SELECT {self._COLS} FROM db_jobs")
+        ]
 
     def pending(self, queue: str) -> list["JobRecord"]:
-        cur = self._db.cursor()
-        cur.execute(
-            self._q(
+        return [
+            self._overlay(r)
+            for r in self._read(
                 f"SELECT {self._COLS} FROM db_jobs "
-                "WHERE queue = ? AND state = 'PENDING' ORDER BY created_at"
-            ),
-            (queue,),
-        )
-        rows = cur.fetchall()
-        if not self._pg:
-            self._db.commit()
-        return [self._overlay(r) for r in rows]
+                "WHERE queue = ? AND state = 'PENDING' ORDER BY created_at",
+                (queue,),
+            )
+        ]
 
     def counts_by_state(self) -> dict[str, int]:
-        cur = self._db.cursor()
-        cur.execute("SELECT state, COUNT(*) FROM db_jobs GROUP BY state")
-        out = {state: int(n) for state, n in cur.fetchall()}
-        if not self._pg:
-            self._db.commit()
-        return out
+        return {
+            state: int(n)
+            for state, n in self._read(
+                "SELECT state, COUNT(*) FROM db_jobs GROUP BY state"
+            )
+        }
 
     def expired(self, now: float) -> list["JobRecord"]:
-        cur = self._db.cursor()
-        cur.execute(
-            self._q(
+        return [
+            self._overlay(r)
+            for r in self._read(
                 f"SELECT {self._COLS} FROM db_jobs "
-                "WHERE reaps_at IS NOT NULL AND reaps_at <= ?"
-            ),
-            (now,),
-        )
-        rows = cur.fetchall()
-        if not self._pg:
-            self._db.commit()
-        return [self._overlay(r) for r in rows]
+                "WHERE reaps_at IS NOT NULL AND reaps_at <= ?",
+                (now,),
+            )
+        ]
 
     # -- groups -------------------------------------------------------
     def put_group(self, group_id: str, job_ids: list[str]) -> None:
-        cur = self._db.cursor()
-        try:
-            cur.execute(
-                self._q(
-                    """
-                    INSERT INTO db_groups (group_id, job_ids) VALUES (?, ?)
-                    ON CONFLICT (group_id) DO UPDATE SET
-                        job_ids = excluded.job_ids
-                    """
-                ),
-                (group_id, json.dumps(list(job_ids))),
-            )
-            self._db.commit()
-        except BaseException:
-            self._db.rollback()
-            raise
+        self._write(
+            """
+            INSERT INTO db_groups (group_id, job_ids) VALUES (?, ?)
+            ON CONFLICT (group_id) DO UPDATE SET job_ids = excluded.job_ids
+            """,
+            (group_id, json.dumps(list(job_ids))),
+        )
 
     def get_group(self, group_id: str) -> list[str] | None:
-        cur = self._db.cursor()
-        cur.execute(
-            self._q("SELECT job_ids FROM db_groups WHERE group_id = ?"),
-            (group_id,),
+        rows = self._read(
+            "SELECT job_ids FROM db_groups WHERE group_id = ?", (group_id,)
         )
-        row = cur.fetchone()
-        if not self._pg:
-            self._db.commit()
-        return None if row is None else list(json.loads(row[0]))
+        return list(json.loads(rows[0][0])) if rows else None
 
     def scan_groups(self) -> dict[str, list[str]]:
-        cur = self._db.cursor()
-        cur.execute("SELECT group_id, job_ids FROM db_groups")
-        rows = cur.fetchall()
-        if not self._pg:
-            self._db.commit()
-        return {gid: json.loads(ids) for gid, ids in rows}
+        return {
+            gid: json.loads(ids)
+            for gid, ids in self._read("SELECT group_id, job_ids FROM db_groups")
+        }
 
     def delete_group(self, group_id: str) -> None:
-        cur = self._db.cursor()
-        try:
-            cur.execute(
-                self._q("DELETE FROM db_groups WHERE group_id = ?"),
-                (group_id,),
-            )
-            self._db.commit()
-        except BaseException:
-            self._db.rollback()
-            raise
+        self._write("DELETE FROM db_groups WHERE group_id = ?", (group_id,))
 
     def close(self) -> None:
         self._db.close()
@@ -705,16 +537,23 @@ class DBAPIBroker(BrokerBackend):
 def sqlite3_dbapi_connect(database: str):
     """Config-addressable sqlite3 connection factory for
     :class:`DBAPIBroker` (``job_store_dbapi =
-    "dungbeetle_spark.broker:sqlite3_dbapi_connect"``): autocommit so
-    BEGIN IMMEDIATE owns its transaction, cross-thread handles for the
-    claim pool, WAL + busy timeout for multi-process writers. A real
-    server deployment points the same seam at its driver instead
-    (``psycopg2:connect`` with ``dialect = "postgresql"``)."""
-    import sqlite3
-
+    "dungbeetle_spark.broker:sqlite3_dbapi_connect"``, the same store
+    as ``job_store = path``): autocommit so BEGIN IMMEDIATE owns its
+    transaction, cross-thread handles for the claim pool, WAL + busy
+    timeout for multi-process writers. A real server deployment points
+    the same seam at its driver instead (``psycopg2:connect`` with
+    ``dialect = "postgresql"``)."""
     con = sqlite3.connect(
         database, check_same_thread=False, isolation_level=None
     )
     con.execute("PRAGMA journal_mode=WAL")
     con.execute("PRAGMA busy_timeout=10000")
     return con
+
+
+class SqliteBroker(DBAPIBroker):
+    """The file-SQLite store (``job_store = path``): single-host,
+    multi-process. Only a constructor — the storage is DBAPIBroker's."""
+
+    def __init__(self, path: str) -> None:
+        super().__init__(lambda: sqlite3_dbapi_connect(path))

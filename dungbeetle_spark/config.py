@@ -83,8 +83,9 @@ class Config:
     result_reaper_interval: float = 0.0  # app.result_reaper_interval; 0 = off
     job_store: str = ""  # SQLite path; "" = in-memory job state
     # Served-database broker (multi-MACHINE fleets): a DBAPI
-    # connection factory import path routes the job store through
-    # broker.DBAPIBroker instead of the file-SQLite backend — e.g.
+    # connection factory import path to reach the job store through
+    # instead of a local SQLite path (both are broker.DBAPIBroker, one
+    # schema) — e.g.
     # job_store_dbapi = "psycopg2:connect" with job_store_dialect =
     # "postgresql" points every server/worker process at one Postgres.
     # Takes precedence over job_store when both are set.

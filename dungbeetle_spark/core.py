@@ -452,10 +452,12 @@ class Core:
         }
 
     def group_status(self, group_id: str) -> dict:
+        # One read per member: the group state is derived from the same
+        # statuses it reports, so it never disagrees with them.
         jobs = [self.job_status(j) for j in self.store.group_jobs(group_id)]
         return {
             "group_id": group_id,
-            "state": self.store.group_state(group_id),
+            "state": jobstore.group_state_of([j["state"] for j in jobs]),
             "jobs": jobs,
         }
 
@@ -670,11 +672,12 @@ class Core:
 
 class _ClaimPool:
     """Distributed-mode worker pool: N threads polling the shared
-    SQLite broker for jobs on one queue.
+    job store (the broker) for jobs on one queue.
 
     The analog of reference workers subscribed to a tasqueue queue
-    (core.go:403-447): any process pointed at the same store file runs
-    its own pool, and the atomic ``JobStore.claim`` guarantees each
+    (core.go:403-447): any process pointed at the same store — the
+    SQLite file itself, that file served by netdbapi, or a Postgres —
+    runs its own pool, and the atomic ``JobStore.claim`` guarantees each
     job is delivered to exactly one of them. ``concurrency=0`` means
     this process tracks the queue (metrics, enqueue) but does not
     execute its jobs — a pure producer.

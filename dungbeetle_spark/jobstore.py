@@ -22,12 +22,13 @@ both roles for the rebuild:
 
 **Storage is pluggable** (broker.py): this class owns broker *policy*
 (state machine, single-flight, recovery, leases) and delegates the
-atomic primitives to a ``BrokerBackend``. The default file-SQLite
-backend covers multi-process-single-host; a Postgres/Redis
-implementation of the same interface (validated by
-tests/test_broker_contract.py) extends the identical semantics across
-machines — the deployment class the reference reserves for its Redis
-broker (cmd/init.go:200-229).
+atomic primitives to a ``BrokerBackend``. Every SQL store is the one
+``DBAPIBroker`` schema: ``persist_path`` opens a SQLite file for
+multi-process-single-host, and a DBAPI factory (that file served over
+TCP, or a Postgres) extends the identical semantics across machines —
+the deployment class the reference reserves for its Redis broker
+(cmd/init.go:200-229). Any other implementation of the interface is
+validated by tests/test_broker_contract.py.
 
 Restart semantics (``recover`` modes, applied to rows the previous
 process left non-terminal):
@@ -94,6 +95,16 @@ class JobRecord:
     heartbeat_at: float | None = None  # owner liveness stamp (lease reclaim)
 
 
+def group_state_of(states: list[str]) -> str:
+    """Aggregate member states (core.go:206-241): all SUCCESS →
+    SUCCESS; any FAILURE → FAILURE; else PENDING."""
+    if states and all(s == SUCCESS for s in states):
+        return SUCCESS
+    if any(s == FAILURE for s in states):
+        return FAILURE
+    return PENDING
+
+
 class SingleFlightError(Exception):
     """Same job_id already Processing/Retrying (core.go:331-339)."""
 
@@ -112,13 +123,10 @@ class JobStore:
         self,
         persist_path: str | None = None,
         recover: str = "fail",
-        recover_inflight: bool | None = None,
         requeue_lease: float = 0.0,
         backend: BrokerBackend | None = None,
     ) -> None:
         """``recover`` picks the restart policy (module docstring).
-        ``recover_inflight=False`` is the pre-distribution spelling of
-        ``recover="attach"`` (worker sidecar), kept as an alias.
 
         ``requeue_lease`` scopes the "requeue" policy: rows whose
         owner heartbeat is fresher than the lease belong to a LIVE
@@ -132,11 +140,9 @@ class JobStore:
 
         ``backend`` plugs in an alternative :class:`BrokerBackend`
         (e.g. a Postgres store for multi-machine deployments); when
-        omitted, ``persist_path`` selects the file-SQLite backend and
-        None means in-memory single-process.
+        omitted, ``persist_path`` opens that SQLite file
+        (:class:`SqliteBroker`) and None means in-memory single-process.
         """
-        if recover_inflight is not None and not recover_inflight:
-            recover = "attach"
         if recover not in ("fail", "requeue", "attach"):
             raise ValueError(f"unknown recover mode: {recover!r}")
         self._requeue_lease = requeue_lease
@@ -514,14 +520,9 @@ class JobStore:
                 raise KeyError(f"unknown group: {group_id}") from None
 
     def group_state(self, group_id: str) -> str:
-        """Aggregate member states (core.go:206-241): all SUCCESS →
-        SUCCESS; any FAILURE → FAILURE; else PENDING."""
-        states = [self.get(j).state for j in self.group_jobs(group_id)]
-        if states and all(s == SUCCESS for s in states):
-            return SUCCESS
-        if any(s == FAILURE for s in states):
-            return FAILURE
-        return PENDING
+        return group_state_of(
+            [self.get(j).state for j in self.group_jobs(group_id)]
+        )
 
     def delete_group(self, group_id: str) -> None:
         with self._lock:

@@ -7,9 +7,14 @@ gets validated by subclassing and implementing :meth:`make_stores` —
 nothing else; every test drives the public ``JobStore`` API exactly
 the way ``core.py`` does.
 
-``TestSqliteBrokerContract`` binds the contract to the default
-file-SQLite backend (and doubles as the regression suite for the
-claim/lease/recovery SQL it inherits from pre-refactor jobstore.py).
+Every SQL store is one ``DBAPIBroker`` schema, bound here three ways
+on a SQLite file: ``TestSqliteBrokerContract`` through ``persist_path``
+(the ``job_store = path`` config), ``TestDBAPIBrokerContract`` through
+an explicit ``DBAPIBroker`` over ``sqlite3_dbapi_connect`` (the
+``job_store_dbapi`` config), and ``TestSqliteBrokerExplicitBackend``
+alternating both spellings over one file, so every obligation holds
+between a ``job_store = path`` process and its DBAPI workers.
+``TestNetDBAPIBrokerContract`` runs the contract across a TCP boundary.
 """
 
 from __future__ import annotations
@@ -240,16 +245,29 @@ class TestSqliteBrokerContract(BrokerContract):
 
 
 class TestSqliteBrokerExplicitBackend(BrokerContract):
-    """Same backend passed explicitly via ``backend=`` — pins the
-    injection seam a Postgres/Redis implementation would use."""
+    """Both spellings of the SQLite store injected via ``backend=`` and
+    alternated over one file: ``SqliteBroker(path)`` and a
+    ``DBAPIBroker`` over ``sqlite3_dbapi_connect`` must be one store."""
 
     def make_stores(self, tmp_path, n: int, **store_kwargs) -> list[JobStore]:
-        from dungbeetle_spark.broker import SqliteBroker
+        from dungbeetle_spark.broker import (
+            DBAPIBroker,
+            SqliteBroker,
+            sqlite3_dbapi_connect,
+        )
 
         path = str(tmp_path / "broker.db")
         kwargs = {"recover": "attach", **store_kwargs}
         return [
-            JobStore(backend=SqliteBroker(path), **kwargs) for _ in range(n)
+            JobStore(
+                backend=(
+                    SqliteBroker(path)
+                    if i % 2 == 0
+                    else DBAPIBroker(lambda: sqlite3_dbapi_connect(path))
+                ),
+                **kwargs,
+            )
+            for i in range(n)
         ]
 
 
@@ -260,23 +278,17 @@ class TestDBAPIBrokerContract(BrokerContract):
     FOR UPDATE SKIP LOCKED row locks in place of BEGIN IMMEDIATE)."""
 
     def make_stores(self, tmp_path, n: int, **store_kwargs) -> list[JobStore]:
-        import sqlite3
-
-        from dungbeetle_spark.broker import DBAPIBroker
+        from dungbeetle_spark.broker import DBAPIBroker, sqlite3_dbapi_connect
 
         path = str(tmp_path / "dbapi.db")
-
-        def connect():
-            con = sqlite3.connect(
-                path, check_same_thread=False, isolation_level=None
-            )
-            con.execute("PRAGMA journal_mode=WAL")
-            con.execute("PRAGMA busy_timeout=10000")
-            return con
-
         kwargs = {"recover": "attach", **store_kwargs}
         return [
-            JobStore(backend=DBAPIBroker(connect, dialect="sqlite"), **kwargs)
+            JobStore(
+                backend=DBAPIBroker(
+                    lambda: sqlite3_dbapi_connect(path), dialect="sqlite"
+                ),
+                **kwargs,
+            )
             for _ in range(n)
         ]
 
@@ -326,22 +338,15 @@ class TestNetDBAPIBrokerContract(BrokerContract):
 # leases must be reclaimed exactly once by survivors.
 # ---------------------------------------------------------------------------
 
-def _mp_connect(path: str):
-    import sqlite3
-
-    con = sqlite3.connect(path, check_same_thread=False, isolation_level=None)
-    con.execute("PRAGMA journal_mode=WAL")
-    con.execute("PRAGMA busy_timeout=10000")
-    return con
-
-
 def _mp_store(path: str) -> JobStore:
     from functools import partial
 
-    from dungbeetle_spark.broker import DBAPIBroker
+    from dungbeetle_spark.broker import DBAPIBroker, sqlite3_dbapi_connect
 
     return JobStore(
-        backend=DBAPIBroker(partial(_mp_connect, path), dialect="sqlite"),
+        backend=DBAPIBroker(
+            partial(sqlite3_dbapi_connect, path), dialect="sqlite"
+        ),
         recover="attach",
     )
 
@@ -536,7 +541,9 @@ class TestDBAPIBrokerMultiProcessStress:
         # age the dead owners' heartbeats past the lease window the
         # survivors will use (monotonic-clock-free: rewrite heartbeats
         # instead of sleeping out a real lease)
-        con = _mp_connect(db)
+        from dungbeetle_spark.broker import sqlite3_dbapi_connect
+
+        con = sqlite3_dbapi_connect(db)
         con.execute(
             "UPDATE db_jobs SET heartbeat_at = heartbeat_at - 3600"
             " WHERE owner LIKE 'crasher-%'"
@@ -687,3 +694,144 @@ def test_netdbapi_broker_reachable_from_config(tmp_path):
         assert a.get("cfg1").state == SUCCESS
     finally:
         server.stop()
+
+
+# ---------------------------------------------------------------------------
+# One schema: a ``job_store = path`` process and DBAPI workers on the
+# same file share one backlog; claims seek the index; files written by
+# the earlier JSON-blob store are upgraded in place.
+# ---------------------------------------------------------------------------
+
+def test_path_store_and_netdbapi_worker_share_one_backlog(tmp_path):
+    """A job posted through ``JobStore(persist_path=db)`` is claimed by
+    a worker configured with ``job_store_dbapi =
+    "dungbeetle_spark.netdbapi:connect"`` on the same file, and the
+    reverse."""
+    from dungbeetle_spark import netdbapi
+    from dungbeetle_spark.broker import DBAPIBroker
+    from dungbeetle_spark.config import _dbapi_factory
+
+    db = str(tmp_path / "jobs.db")
+    server_store = JobStore(persist_path=db, recover="requeue")
+    server = netdbapi.serve(db)
+    try:
+        host, port = server.address
+        worker = JobStore(
+            backend=DBAPIBroker(_dbapi_factory(
+                "dungbeetle_spark.netdbapi:connect",
+                {"host": host, "port": str(port)},
+            )),
+            recover="attach",
+        )
+        server_store.create(JobRecord(job_id="from-path", task="t", queue="q"))
+        rec = worker.claim(["q"], "worker", lease=60.0)
+        assert rec is not None and rec.job_id == "from-path"
+        assert worker.set_state("from-path", SUCCESS, count=3)
+        assert server_store.get("from-path").count == 3
+
+        worker.create(JobRecord(job_id="from-net", task="t", queue="q"))
+        rec = server_store.claim(["q"], "server", lease=60.0)
+        assert rec is not None and rec.job_id == "from-net"
+        assert worker.get("from-net").owner == "server"
+        assert worker.claim(["q"], "worker", lease=60.0) is None
+        worker.close()
+    finally:
+        server.stop()
+        server_store.close()
+
+
+@pytest.mark.parametrize("lease", [0.0, 60.0])
+def test_claim_selects_seek_queue_and_state(tmp_path, lease):
+    """Every claim SELECT seeks (queue, state) on ``db_jobs_claim``, so
+    an idle claim does not read the queue's terminal history."""
+    import sqlite3
+
+    db = str(tmp_path / "jobs.db")
+    store = JobStore(persist_path=db, recover="attach")
+    statements: list[str] = []
+    store._backend._db.set_trace_callback(statements.append)
+    store.create(JobRecord(job_id="j", task="t", queue="q"))
+    assert store.claim(["q", "r"], "o", lease=lease) is not None  # hit
+    assert store.claim(["q"], "o", lease=lease) is None  # idle
+    store._backend._db.set_trace_callback(None)
+    claims = [s for s in statements if "ORDER BY created_at" in s]
+    assert len(claims) == 3  # hit: read + locked re-read; idle: read
+    con = sqlite3.connect(db)
+    try:
+        for sql in claims:
+            plan = " | ".join(
+                row[3] for row in con.execute("EXPLAIN QUERY PLAN " + sql)
+            )
+            assert "db_jobs_claim (queue=? AND state=?)" in plan, plan
+    finally:
+        con.close()
+        store.close()
+
+
+def test_blob_schema_file_is_upgraded_in_place(tmp_path):
+    """A file holding the JSON-blob tables (``jobs``/``groups``) opens
+    with its PENDING row claimable — through either spelling — and its
+    terminal, group and expired rows intact; the old tables are
+    gone."""
+    import json
+    import sqlite3
+    from dataclasses import asdict
+
+    from dungbeetle_spark.broker import DBAPIBroker, sqlite3_dbapi_connect
+
+    now = time.time()
+    rows = [
+        JobRecord(job_id="pend", task="t", queue="q", created_at=now - 50),
+        JobRecord(job_id="done", task="t", queue="q", state=SUCCESS,
+                  count=7, ttl=30, result_path="/r/done", args=["1"],
+                  group_id="g", created_at=now - 100,
+                  finished_at=now - 90.123456789, owner="host:1",
+                  heartbeat_at=now - 95),
+        JobRecord(job_id="kept", task="t", queue="q", state=FAILURE,
+                  error="boom", ttl=0, result_path="/r/kept",
+                  group_id="g", created_at=now - 80, finished_at=now - 70),
+        JobRecord(job_id="late", task="t", queue="q", state=SUCCESS,
+                  ttl=3600, result_path="/r/late", created_at=now - 60,
+                  finished_at=now - 10),
+    ]
+    db = str(tmp_path / "old.db")
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE jobs (job_id TEXT PRIMARY KEY, data TEXT)")
+    con.execute("CREATE TABLE groups (group_id TEXT PRIMARY KEY, job_ids TEXT)")
+    con.executemany(
+        "INSERT INTO jobs VALUES (?, ?)",
+        [(r.job_id, json.dumps(asdict(r))) for r in rows],
+    )
+    con.execute("INSERT INTO groups VALUES ('g', ?)",
+                (json.dumps(["done", "kept"]),))
+    con.commit()
+    con.close()
+
+    store = JobStore(persist_path=db, recover="requeue")
+    worker = JobStore(
+        backend=DBAPIBroker(lambda: sqlite3_dbapi_connect(db)),
+        recover="attach",
+    )
+    try:
+        for r in rows:
+            assert store.get(r.job_id) == r
+        assert store.group_jobs("g") == ["done", "kept"]
+        assert store.group_state("g") == FAILURE
+        assert [r.job_id for r in store.expired(now)] == ["done"]
+        assert [r.job_id for r in worker.pending("q")] == ["pend"]
+        got = worker.claim(["q"], "worker", lease=60.0)
+        assert got is not None and got.job_id == "pend"
+        assert store.get("pend").state == STARTED
+        con = sqlite3.connect(db)
+        try:
+            tables = {n for (n,) in con.execute(
+                "SELECT name FROM sqlite_master WHERE type = 'table'"
+            )}
+            reaps = dict(con.execute("SELECT job_id, reaps_at FROM db_jobs"))
+        finally:
+            con.close()
+        assert not tables & {"jobs", "groups"}
+        assert reaps == {r.job_id: DBAPIBroker._reaps_at(r) for r in rows}
+    finally:
+        worker.close()
+        store.close()

@@ -9,6 +9,7 @@ the reference has — the canonical-cast schema of a results table
 
 from __future__ import annotations
 
+import dataclasses
 import time
 
 import pytest
@@ -441,9 +442,9 @@ def test_single_flight_across_processes(tmp_path):
         s2.create(jobstore.JobRecord(job_id="sf1", task="t", queue="q"))
 
     # a sidecar attaching to the LIVE store must not fail the
-    # primary's in-flight jobs (recover_inflight=False) — and must
-    # still see and honor them
-    s3 = jobstore.JobStore(persist_path=db, recover_inflight=False)
+    # primary's in-flight jobs (recover="attach") — and must still see
+    # and honor them
+    s3 = jobstore.JobStore(persist_path=db, recover="attach")
     assert s3.get("sf1").state == jobstore.PENDING
     with pytest.raises(SingleFlightError):  # loaded live job honored
         s3.create(jobstore.JobRecord(job_id="sf1", task="t", queue="q"))
@@ -602,3 +603,27 @@ def test_fair_pool_set_per_queue_and_queues_interleave(
     finally:
         backend.write = orig_write
         c.stop()
+
+
+def test_group_status_state_agrees_with_its_members():
+    """``group_status`` reads each member once: a member advancing
+    between two reads of the store cannot make the group answer SUCCESS
+    beside a member it lists as STARTED."""
+    core = Core(None)
+    core.store.create(jobstore.JobRecord(
+        job_id="gm", task="t", queue="q", state=jobstore.STARTED
+    ))
+    core.store.create_group("gs", ["gm"])
+    get = core.store.get
+
+    def advancing_get(job_id):
+        rec = dataclasses.replace(get(job_id))  # a read, not the live row
+        if rec.state == jobstore.STARTED:
+            core.store.set_state(job_id, jobstore.SUCCESS)
+        return rec
+
+    core.store.get = advancing_get
+    st = core.group_status("gs")
+    assert [j["state"] for j in st["jobs"]] == [jobstore.STARTED]
+    assert st["state"] == jobstore.PENDING
+    assert core.group_status("gs")["state"] == jobstore.SUCCESS
