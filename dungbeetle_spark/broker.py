@@ -30,6 +30,9 @@ Obligations (enforced by the contract tests):
 - ``mutate`` is a transactional read-modify-write: concurrent mutates
   of one row serialize, and a mutate of a deleted row returns None
   without resurrecting it.
+- ``active`` returns only the PENDING/STARTED/RETRY rows, filtered
+  store-side: restart recovery reads the live backlog, never the
+  terminal history. Groups are read by id only (``get_group``).
 - Threading: one backend instance is only ever called under its
   ``JobStore``'s lock — implementations need no internal locking for
   same-instance calls, but MUST be safe against *other instances* of
@@ -104,9 +107,11 @@ class BrokerBackend(ABC):
     def delete(self, job_id: str) -> None: ...
 
     @abstractmethod
-    def scan(self) -> list["JobRecord"]:
-        """Every row, materialized (restart recovery walks this while
-        mutating — implementations must not return a live cursor)."""
+    def active(self) -> list["JobRecord"]:
+        """Rows in PENDING, STARTED or RETRY, materialized (restart
+        recovery walks this while mutating — implementations must not
+        return a live cursor). Filtered store-side: opening a store
+        must not deserialize its terminal history."""
 
     @abstractmethod
     def pending(self, queue: str) -> list["JobRecord"]:
@@ -128,9 +133,6 @@ class BrokerBackend(ABC):
 
     @abstractmethod
     def get_group(self, group_id: str) -> list[str] | None: ...
-
-    @abstractmethod
-    def scan_groups(self) -> dict[str, list[str]]: ...
 
     @abstractmethod
     def delete_group(self, group_id: str) -> None: ...
@@ -201,6 +203,11 @@ class DBAPIBroker(BrokerBackend):
         cur.execute(
             "CREATE INDEX IF NOT EXISTS db_jobs_claim "
             "ON db_jobs (queue, state, created_at)"
+        )
+        # heartbeat's seek: only running rows, so it stays small
+        cur.execute(
+            "CREATE INDEX IF NOT EXISTS db_jobs_running "
+            "ON db_jobs (owner) WHERE state = 'STARTED'"
         )
         cur.execute(
             """
@@ -471,10 +478,13 @@ class DBAPIBroker(BrokerBackend):
     def delete(self, job_id: str) -> None:
         self._write("DELETE FROM db_jobs WHERE job_id = ?", (job_id,))
 
-    def scan(self) -> list["JobRecord"]:
+    def active(self) -> list["JobRecord"]:
         return [
             self._overlay(r)
-            for r in self._read(f"SELECT {self._COLS} FROM db_jobs")
+            for r in self._read(
+                f"SELECT {self._COLS} FROM db_jobs "
+                "WHERE state IN ('PENDING', 'STARTED', 'RETRY')"
+            )
         ]
 
     def pending(self, queue: str) -> list["JobRecord"]:
@@ -520,12 +530,6 @@ class DBAPIBroker(BrokerBackend):
             "SELECT job_ids FROM db_groups WHERE group_id = ?", (group_id,)
         )
         return list(json.loads(rows[0][0])) if rows else None
-
-    def scan_groups(self) -> dict[str, list[str]]:
-        return {
-            gid: json.loads(ids)
-            for gid, ids in self._read("SELECT group_id, job_ids FROM db_groups")
-        }
 
     def delete_group(self, group_id: str) -> None:
         self._write("DELETE FROM db_groups WHERE group_id = ?", (group_id,))

@@ -81,7 +81,7 @@ class Config:
     distributed: bool = False
     default_job_ttl: float = 60.0  # app.default_job_ttl
     result_reaper_interval: float = 0.0  # app.result_reaper_interval; 0 = off
-    job_store: str = ""  # SQLite path; "" = in-memory job state
+    job_store: str = ""  # SQLite path; "" = in-memory SQLite
     # Served-database broker (multi-MACHINE fleets): a DBAPI
     # connection factory import path to reach the job store through
     # instead of a local SQLite path (both are broker.DBAPIBroker, one

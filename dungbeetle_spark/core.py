@@ -84,7 +84,7 @@ class Core:
         worker_concurrency: int = 10,  # reference default, cmd/init.go:44
         default_job_ttl: int = 60,
         result_reaper_interval: float = 0.0,  # seconds; 0 = off (reference parity)
-        jobstore_path: str | None = None,  # SQLite file; None = in-memory only
+        jobstore_path: str | None = None,  # SQLite file; None = in-memory SQLite
         jobstore_recover_inflight: bool = True,  # False for worker sidecars
         distributed: bool = False,  # workers claim from the shared store
         claim_queues: list[str] | None = None,  # None = claim every queue
@@ -257,10 +257,10 @@ class Core:
         if self._cancel_watch is not None:
             self._cancel_watch.join(timeout=5)
             self._cancel_watch = None
-        # Close the persistent store only once every worker thread has
-        # exited: a worker finishing a job after close() would find the
-        # DB gone and its terminal-state write would silently vanish —
-        # the next startup would then falsely fail a SUCCEEDED job as
+        # Close the store only once every worker thread has exited: a
+        # worker finishing a job after close() would find the DB
+        # closed and its terminal-state write would fail — the next
+        # startup would then falsely fail a SUCCEEDED job as
         # 'interrupted by engine restart'. If draining exceeds the
         # timeout (a long Spark query mid-flight), leave the
         # connection open for those daemon threads instead of dropping

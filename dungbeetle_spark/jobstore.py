@@ -9,11 +9,11 @@ to whichever worker process polls them first (core.go:403-447; README
 both roles for the rebuild:
 
 - **State store.** Same state machine, same payloads. Every mutation
-  is a read-modify-write through a store method, so with a persistent
-  backend the stored row is authoritative and any process sharing the
-  backend sees the same truth (fixing the reference's read-then-
-  enqueue race on single-flight IDs, core.go:331-339, with a real
-  atomic check-and-set).
+  is a read-modify-write through a store method, so the stored row is
+  authoritative and any process sharing a persistent backend sees the
+  same truth (fixing the reference's read-then-enqueue race on
+  single-flight IDs, core.go:331-339, with a real atomic
+  check-and-set).
 - **Broker.** ``create`` = insert of a PENDING row; ``claim`` = an
   atomic owner-stamping update. A server process and any number of
   ``--worker-only`` processes pointed at the same backend share one
@@ -22,13 +22,16 @@ both roles for the rebuild:
 
 **Storage is pluggable** (broker.py): this class owns broker *policy*
 (state machine, single-flight, recovery, leases) and delegates the
-atomic primitives to a ``BrokerBackend``. Every SQL store is the one
-``DBAPIBroker`` schema: ``persist_path`` opens a SQLite file for
-multi-process-single-host, and a DBAPI factory (that file served over
-TCP, or a Postgres) extends the identical semantics across machines —
-the deployment class the reference reserves for its Redis broker
-(cmd/init.go:200-229). Any other implementation of the interface is
-validated by tests/test_broker_contract.py.
+atomic primitives to a ``BrokerBackend``. There is one code path:
+every store, the in-memory one included, is the one ``DBAPIBroker``
+schema. With no path and no backend the store is a private SQLite
+``:memory:`` database (single process); ``persist_path`` opens a
+SQLite file for multi-process-single-host, and a DBAPI factory (that
+file served over TCP, or a Postgres) extends the identical semantics
+across machines — the deployment class the reference reserves for its
+Redis broker (cmd/init.go:200-229). ``JobStore`` holds no copy of any
+record. Any other implementation of the interface is validated by
+tests/test_broker_contract.py.
 
 Restart semantics (``recover`` modes, applied to rows the previous
 process left non-terminal):
@@ -56,6 +59,7 @@ from __future__ import annotations
 
 import threading
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from dungbeetle_spark.broker import BrokerBackend, SqliteBroker
@@ -110,13 +114,17 @@ class SingleFlightError(Exception):
 
 
 class JobStore:
-    """Thread-safe (and, when backed, process-shared) job registry.
+    """Thread-safe (and, over a shared backend, process-shared) job
+    registry.
 
     Job IDs are caller-suppliable and *non-unique* across completed
     runs (a re-post of a finished ID overwrites it, like the reference
     re-enqueueing the same ID); only one instance of an ID may be
     active at a time — enforced atomically here, across processes when
     a shared backend is configured.
+
+    Every call goes to the backend; the store keeps no copy of any
+    record, so what it returns is always the stored row.
     """
 
     def __init__(
@@ -141,122 +149,90 @@ class JobStore:
         ``backend`` plugs in an alternative :class:`BrokerBackend`
         (e.g. a Postgres store for multi-machine deployments); when
         omitted, ``persist_path`` opens that SQLite file
-        (:class:`SqliteBroker`) and None means in-memory single-process.
+        (:class:`SqliteBroker`), and None opens a private SQLite
+        ``:memory:`` database — the same code path, so job args must
+        be JSON values on every store.
         """
         if recover not in ("fail", "requeue", "attach"):
             raise ValueError(f"unknown recover mode: {recover!r}")
         self._requeue_lease = requeue_lease
-        self._jobs: dict[str, JobRecord] = {}
-        self._groups: dict[str, list[str]] = {}
         self._lock = threading.RLock()
-        if backend is None and persist_path:
-            backend = SqliteBroker(persist_path)
-        self._backend: BrokerBackend | None = backend
-        if self._backend is not None:
-            self._recover(recover)
+        self._backend = backend or SqliteBroker(persist_path or ":memory:")
+        self._recover(recover)
 
     # -- recovery -----------------------------------------------------
     def _recover(self, mode: str) -> None:
         """Apply the restart policy to rows a dead process left active.
 
-        Every reset is a transactional per-row RMW through the backend
-        (``mutate`` re-reads under the writer lock), so an owner's
-        terminal write landing between our scan and the reset wins —
-        blindly re-PENDING a SUCCESS row would re-execute a completed
-        job.
+        Only the active rows are read (``BrokerBackend.active``), never
+        the terminal history. Every reset is a transactional per-row
+        RMW through the backend (``mutate`` re-reads under the writer
+        lock), so an owner's terminal write landing between our read
+        and the reset wins — blindly re-PENDING a SUCCESS row would
+        re-execute a completed job.
         """
-        assert self._backend is not None
+        if mode == "attach":
+            return
         now = time.time()
-        for rec in self._backend.scan():  # materialized, not a cursor
-            if rec.state in _ACTIVE and mode == "fail":
 
-                def _fail(r: JobRecord) -> None:
-                    if r.state in _ACTIVE:
-                        r.state = FAILURE
-                        r.error = "interrupted by engine restart"
-                        r.finished_at = r.finished_at or time.time()
+        def _fail(r: JobRecord) -> None:
+            if r.state in _ACTIVE:
+                r.state = FAILURE
+                r.error = "interrupted by engine restart"
+                r.finished_at = r.finished_at or time.time()
 
-                rec = self._backend.mutate(rec.job_id, _fail) or rec
-            elif rec.state in (STARTED, RETRY) and mode == "requeue":
+        def _requeue(r: JobRecord) -> None:
+            if r.state in (STARTED, RETRY):
+                r.state = PENDING
+                r.owner = ""
+
+        for rec in self._backend.active():  # materialized, not a cursor
+            if mode == "fail":
+                self._backend.mutate(rec.job_id, _fail)
+            elif rec.state != PENDING and (
                 # Only reclaim rows no live process owns: a fresh
                 # heartbeat means a live sibling worker is mid-job —
                 # stealing it here would double-execute. (Stale rows
                 # also remain covered by lease reclaim in claim();
                 # resetting them at startup is just the fast path.)
-                stale = (
-                    self._requeue_lease <= 0
-                    or not rec.owner
-                    or (rec.heartbeat_at or 0.0) <= now - self._requeue_lease
-                )
-                if stale:
-
-                    def _requeue(r: JobRecord) -> None:
-                        if r.state in (STARTED, RETRY):
-                            r.state = PENDING
-                            r.owner = ""
-
-                    rec = self._backend.mutate(rec.job_id, _requeue) or rec
-            self._jobs[rec.job_id] = rec
-        self._groups.update(self._backend.scan_groups())
+                self._requeue_lease <= 0
+                or not rec.owner
+                or (rec.heartbeat_at or 0.0) <= now - self._requeue_lease
+            ):
+                self._backend.mutate(rec.job_id, _requeue)
 
     def close(self) -> None:
+        """Close the backend; every later call raises."""
         with self._lock:
-            if self._backend is not None:
-                self._backend.close()
-                self._backend = None
+            self._backend.close()
 
     # -- jobs ---------------------------------------------------------
     def create(self, rec: JobRecord) -> JobRecord:
+        # Single-flight: this or another engine process sharing the
+        # backend may own an active instance of the ID. check_and_put
+        # is atomic against concurrent creators (the reference gets
+        # the same guarantee from Redis, core.go:331-339 — minus its
+        # read-then-enqueue race).
         with self._lock:
-            if self._backend is None:
-                existing = self._jobs.get(rec.job_id)
-                if existing is not None and existing.state in _ACTIVE:
-                    raise SingleFlightError(
-                        f"job {rec.job_id} is already running: {existing.state}"
-                    )
-                self._jobs[rec.job_id] = rec
-                return rec
-            # Cross-process single-flight: another engine process
-            # sharing this backend may own an active instance of the
-            # ID. check_and_put is atomic against concurrent creators
-            # (the reference gets the same guarantee from Redis,
-            # core.go:331-339 — minus its read-then-enqueue race).
             existing = self._backend.check_and_put(rec, _ACTIVE)
-            if existing is not None:
-                local = self._jobs.get(rec.job_id)
-                where = (
-                    ""
-                    if local is not None and local.state in _ACTIVE
-                    else " in another process"
-                )
-                raise SingleFlightError(
-                    f"job {rec.job_id} is already running"
-                    f"{where}: {existing.state}"
-                )
-            self._jobs[rec.job_id] = rec
-            return rec
+        if existing is not None:
+            raise SingleFlightError(
+                f"job {rec.job_id} is already running in this or "
+                f"another process: {existing.state}"
+            )
+        return rec
 
     def get(self, job_id: str) -> JobRecord:
-        """Authoritative record: the backend row when persistent (a
-        sibling process may have advanced it), else the local object."""
+        """The stored row (a sibling process may have advanced it)."""
         with self._lock:
-            if self._backend is not None:
-                rec = self._backend.get(job_id)
-                if rec is not None:
-                    self._jobs[job_id] = rec
-                    return rec
-                self._jobs.pop(job_id, None)
-                raise KeyError(f"unknown job: {job_id}")
-            try:
-                return self._jobs[job_id]
-            except KeyError:
-                raise KeyError(f"unknown job: {job_id}") from None
+            rec = self._backend.get(job_id)
+        if rec is None:
+            raise KeyError(f"unknown job: {job_id}")
+        return rec
 
     def exists(self, job_id: str) -> bool:
         with self._lock:
-            if self._backend is not None:
-                return self._backend.get(job_id) is not None
-            return job_id in self._jobs
+            return self._backend.get(job_id) is not None
 
     def set_state(
         self,
@@ -272,33 +248,23 @@ class JobStore:
     ) -> bool:
         """Atomic read-modify-write of the job's status fields.
 
-        Returns False (and drops the local cache entry) when the row
-        has been purged by a cancel in this or another process — the
-        caller's terminal write is dropped rather than resurrecting a
-        cancelled job.
+        Returns False when the row has been purged by a cancel in this
+        or another process — the caller's terminal write is dropped
+        rather than resurrecting a cancelled job.
         """
-        with self._lock:
-            if self._backend is not None:
-                rec = self._backend.mutate(
-                    job_id,
-                    lambda r: self._apply(
-                        r, state, count, error, result_path,
-                        result_backend, attempts, owner,
-                    ),
-                )
-                if rec is None:
-                    self._jobs.pop(job_id, None)
-                    return False
-                self._jobs[job_id] = rec
-                return True
-            rec = self._jobs.get(job_id)
-            if rec is None:
-                return False
-            self._apply(
-                rec, state, count, error, result_path,
+        return self._mutate(
+            job_id,
+            lambda r: self._apply(
+                r, state, count, error, result_path,
                 result_backend, attempts, owner,
-            )
-            return True
+            ),
+        ) is not None
+
+    def _mutate(
+        self, job_id: str, fn: Callable[[JobRecord], None]
+    ) -> JobRecord | None:
+        with self._lock:
+            return self._backend.mutate(job_id, fn)
 
     @staticmethod
     def _apply(
@@ -354,34 +320,7 @@ class JobStore:
         """
         now = time.time() if now is None else now
         with self._lock:
-            if self._backend is not None:
-                rec = self._backend.claim(queues, owner, now, lease)
-                if rec is not None:
-                    self._jobs[rec.job_id] = rec
-                return rec
-
-            def _runnable(r: JobRecord) -> bool:
-                if r.queue not in queues or r.cancelled:
-                    return False
-                if r.eta is not None and r.eta > now:
-                    return False
-                if r.state in (PENDING, RETRY) and not r.owner:
-                    return True
-                return (
-                    lease > 0
-                    and r.state == STARTED
-                    and bool(r.owner)
-                    and (r.heartbeat_at or 0.0) <= now - lease
-                )
-
-            cands = [r for r in self._jobs.values() if _runnable(r)]
-            if not cands:
-                return None
-            rec = min(cands, key=lambda r: r.created_at)
-            rec.owner = owner
-            rec.state = STARTED
-            rec.heartbeat_at = now
-            return rec
+            return self._backend.claim(queues, owner, now, lease)
 
     def heartbeat(self, owner: str, now: float | None = None) -> None:
         """Refresh the liveness stamp on every job ``owner`` is
@@ -389,49 +328,28 @@ class JobStore:
         so its leases never expire while it's alive."""
         now = time.time() if now is None else now
         with self._lock:
-            if self._backend is not None:
-                self._backend.heartbeat(owner, now)
-            for rec in self._jobs.values():
-                if rec.owner == owner and rec.state == STARTED:
-                    rec.heartbeat_at = now
+            self._backend.heartbeat(owner, now)
 
     def mark_cancelled(self, job_id: str) -> JobRecord:
-        with self._lock:
-            if self._backend is not None:
+        def _cancel(r: JobRecord) -> None:
+            r.cancelled = True
 
-                def _cancel(r: JobRecord) -> None:
-                    r.cancelled = True
-
-                rec = self._backend.mutate(job_id, _cancel)
-                if rec is None:
-                    raise KeyError(f"unknown job: {job_id}")
-                self._jobs[job_id] = rec
-                return rec
-            rec = self.get(job_id)
-            rec.cancelled = True
-            return rec
+        rec = self._mutate(job_id, _cancel)
+        if rec is None:
+            raise KeyError(f"unknown job: {job_id}")
+        return rec
 
     def clear_result(self, job_id: str) -> None:
         """Forget a reaped job's result location (TTL reaper)."""
-        with self._lock:
-            if self._backend is not None:
 
-                def _clear(r: JobRecord) -> None:
-                    r.result_path = ""
+        def _clear(r: JobRecord) -> None:
+            r.result_path = ""
 
-                rec = self._backend.mutate(job_id, _clear)
-                if rec is not None:
-                    self._jobs[job_id] = rec
-                return
-            rec = self._jobs.get(job_id)
-            if rec is not None:
-                rec.result_path = ""
+        self._mutate(job_id, _clear)
 
     def delete(self, job_id: str) -> None:
         with self._lock:
-            self._jobs.pop(job_id, None)
-            if self._backend is not None:
-                self._backend.delete(job_id)
+            self._backend.delete(job_id)
 
     def pending(self, queue: str) -> list[JobRecord]:
         """Pending jobs on a queue, oldest first (core.go:149-162 —
@@ -439,24 +357,12 @@ class JobStore:
         order run backend-side — metrics/pending polls must not
         deserialize the full (mostly terminal) job history."""
         with self._lock:
-            if self._backend is not None:
-                return self._backend.pending(queue)
-            recs = list(self._jobs.values())
-        return sorted(
-            (r for r in recs if r.queue == queue and r.state == PENDING),
-            key=lambda r: r.created_at,
-        )
+            return self._backend.pending(queue)
 
     def counts_by_state(self) -> dict[str, int]:
         """Job counts keyed by state (for the /metrics gauges)."""
         with self._lock:
-            if self._backend is not None:
-                return self._backend.counts_by_state()
-            recs = list(self._jobs.values())
-        counts: dict[str, int] = {}
-        for rec in recs:
-            counts[rec.state] = counts.get(rec.state, 0) + 1
-        return counts
+            return self._backend.counts_by_state()
 
     def expired(self, now: float) -> list[JobRecord]:
         """Terminal jobs whose results outlived their TTL.
@@ -468,56 +374,27 @@ class JobStore:
         ``ttl <= 0`` means keep forever.
         """
         with self._lock:
-            if self._backend is not None:
-                return self._backend.expired(now)
-            recs = list(self._jobs.values())
-        return [
-            r
-            for r in recs
-            if r.state in _TERMINAL
-            and r.ttl > 0
-            and r.result_path
-            and r.finished_at is not None
-            and r.finished_at + r.ttl <= now
-        ]
+            return self._backend.expired(now)
 
     # -- groups -------------------------------------------------------
     def create_group(self, group_id: str, job_ids: list[str]) -> None:
         with self._lock:
-            self._groups[group_id] = list(job_ids)
-            if self._backend is not None:
-                self._backend.put_group(group_id, list(job_ids))
+            self._backend.put_group(group_id, list(job_ids))
             for jid in job_ids:
                 self.set_group(jid, group_id)
 
     def set_group(self, job_id: str, group_id: str) -> None:
-        with self._lock:
-            if self._backend is not None:
+        def _set(r: JobRecord) -> None:
+            r.group_id = group_id
 
-                def _set(r: JobRecord) -> None:
-                    r.group_id = group_id
-
-                rec = self._backend.mutate(job_id, _set)
-                if rec is not None:
-                    self._jobs[job_id] = rec
-                return
-            rec = self._jobs.get(job_id)
-            if rec is not None:
-                rec.group_id = group_id
+        self._mutate(job_id, _set)
 
     def group_jobs(self, group_id: str) -> list[str]:
         with self._lock:
-            if self._backend is not None:
-                ids = self._backend.get_group(group_id)
-                if ids is not None:
-                    self._groups[group_id] = list(ids)
-                    return list(ids)
-                self._groups.pop(group_id, None)
-                raise KeyError(f"unknown group: {group_id}")
-            try:
-                return list(self._groups[group_id])
-            except KeyError:
-                raise KeyError(f"unknown group: {group_id}") from None
+            ids = self._backend.get_group(group_id)
+        if ids is None:
+            raise KeyError(f"unknown group: {group_id}")
+        return ids
 
     def group_state(self, group_id: str) -> str:
         return group_state_of(
@@ -526,6 +403,4 @@ class JobStore:
 
     def delete_group(self, group_id: str) -> None:
         with self._lock:
-            self._groups.pop(group_id, None)
-            if self._backend is not None:
-                self._backend.delete_group(group_id)
+            self._backend.delete_group(group_id)

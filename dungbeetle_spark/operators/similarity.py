@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from dungbeetle_spark.functions.texts import md5_hash60_sql
+from dungbeetle_spark.planmode import maybe_local_checkpoint
 from dungbeetle_spark.queries import _t, query
 from dungbeetle_spark.sources.catalog import fan_out
 
@@ -1348,10 +1349,11 @@ def ann_recall_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ADVICE r14: plan inspection skips the exact arm's eager
         # materialization (the one bounded head pull above still runs
         # — it defines the probe frames).
-        exact = (
-            ann_cosine_topk(spark, sf_dir, _qpd=qpd)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=False)
+        exact = maybe_local_checkpoint(
+            ann_cosine_topk(spark, sf_dir, _qpd=qpd).select(
+                "query_id", "neighbor_id"
+            ),
+            eager=False,
         )
         lsh = ann_lsh_bucketed(spark, sf_dir).select("query_id", "neighbor_id")
         ivf = ann_ivf(spark, sf_dir, _cpd=cpd, _qpd=qpd).select(

@@ -27,6 +27,7 @@ import pytest
 from dungbeetle_spark.jobstore import (
     FAILURE,
     PENDING,
+    RETRY,
     STARTED,
     SUCCESS,
     JobRecord,
@@ -835,3 +836,169 @@ def test_blob_schema_file_is_upgraded_in_place(tmp_path):
     finally:
         worker.close()
         store.close()
+
+
+# ---------------------------------------------------------------------------
+# No record mirror: opening a store reads only the live backlog, the
+# store holds no copy of any row, heartbeat seeks the running rows, and
+# a closed store refuses writes instead of dropping them.
+# ---------------------------------------------------------------------------
+
+_HISTORY = 20_000
+
+
+def _history_file(db: str) -> dict[str, str]:
+    """A file holding ``_HISTORY`` terminal rows plus a few active ones
+    left by a dead process; returns the active ids with their state."""
+    from dungbeetle_spark.broker import SqliteBroker
+
+    active = {
+        "act-p0": PENDING, "act-p1": PENDING,
+        "act-s0": STARTED, "act-s1": STARTED, "act-r0": RETRY,
+    }
+    broker = SqliteBroker(db)
+    cur = broker._db.cursor()
+    cur.execute("BEGIN")
+    for i in range(_HISTORY):
+        broker._upsert(cur, JobRecord(
+            job_id=f"hist-{i}", task="t", queue="q",
+            state=FAILURE if i % 50 == 0 else SUCCESS,
+            created_at=1_700_000_000.0 + i, finished_at=1_700_000_001.0 + i,
+            owner=f"dead:{i % 8}",
+        ))
+    for job_id, state in active.items():
+        owned = state != PENDING
+        broker._upsert(cur, JobRecord(
+            job_id=job_id, task="t", queue="q", state=state,
+            owner="dead:1" if owned else "",
+            heartbeat_at=1_700_000_000.0 if owned else None,
+        ))
+    broker._db.commit()
+    broker.close()
+    return active
+
+
+@pytest.mark.parametrize("mode", ["fail", "requeue"])
+def test_open_reads_and_mutates_only_active_rows(tmp_path, mode):
+    """Opening a file with 20k terminal rows selects the active rows by
+    state in SQL, writes only the rows the restart policy changes, and
+    leaves no per-record copy behind in the store."""
+    import gc
+
+    from dungbeetle_spark.broker import SqliteBroker
+
+    db = str(tmp_path / "history.db")
+    active = _history_file(db)
+    backend = SqliteBroker(db)
+    statements: list[str] = []
+    backend._db.set_trace_callback(statements.append)
+    gc.collect()
+    records_before = sum(isinstance(o, JobRecord) for o in gc.get_objects())
+    store = JobStore(backend=backend, recover=mode)
+    gc.collect()
+    records_after = sum(isinstance(o, JobRecord) for o in gc.get_objects())
+    backend._db.set_trace_callback(None)
+    try:
+        def ids_in(sqls: list[str]) -> set[str]:
+            return {j for j in active if any(f"'{j}'" in s for s in sqls)}
+
+        selects = [s for s in statements
+                   if s.lstrip().startswith("SELECT") and "db_jobs" in s]
+        scans = [s for s in selects if "job_id =" not in s]
+        assert scans
+        for sql in scans:
+            assert "state IN ('PENDING', 'STARTED', 'RETRY')" in sql, sql
+        changed = {
+            job_id for job_id, state in active.items()
+            if mode == "fail" or state != PENDING
+        }
+        keyed = [s for s in selects if "job_id =" in s]
+        assert len(keyed) == len(changed) and ids_in(keyed) == changed
+        written = [s for s in statements if "INSERT INTO db_jobs" in s]
+        assert len(written) == len(changed) and ids_in(written) == changed
+        assert records_after - records_before < 10
+        for job_id, state in active.items():
+            want = FAILURE if mode == "fail" else PENDING
+            assert store.get(job_id).state == want
+        counts = store.counts_by_state()
+        assert counts[SUCCESS] + counts[FAILURE] \
+            == _HISTORY + (len(active) if mode == "fail" else 0)
+    finally:
+        store.close()
+
+
+def test_heartbeat_seeks_running_index(tmp_path):
+    """Heartbeat's UPDATE seeks ``db_jobs_running`` (owner, STARTED
+    rows only) instead of reading every row of the history."""
+    import sqlite3
+
+    db = str(tmp_path / "jobs.db")
+    store = JobStore(persist_path=db, recover="attach")
+    store.create(JobRecord(job_id="j", task="t", queue="q"))
+    assert store.claim(["q"], "o", lease=60.0) is not None
+    statements: list[str] = []
+    store._backend._db.set_trace_callback(statements.append)
+    store.heartbeat("o", now=123.0)
+    store._backend._db.set_trace_callback(None)
+    (sql,) = [s for s in statements if s.lstrip().startswith("UPDATE")]
+    assert store.get("j").heartbeat_at == 123.0
+    con = sqlite3.connect(db)
+    try:
+        plan = " | ".join(
+            row[3] for row in con.execute("EXPLAIN QUERY PLAN " + sql)
+        )
+        assert "db_jobs_running" in plan, plan
+    finally:
+        con.close()
+        store.close()
+
+
+@pytest.mark.parametrize("on_file", [False, True])
+def test_closed_store_refuses_writes(tmp_path, on_file):
+    """After ``close()`` a write raises: it must not report success for
+    a row that no longer reaches any store."""
+    import sqlite3
+
+    store = JobStore(
+        persist_path=str(tmp_path / "jobs.db") if on_file else None
+    )
+    store.create(JobRecord(job_id="j", task="t", queue="q"))
+    store.close()
+    with pytest.raises(sqlite3.ProgrammingError):
+        store.set_state("j", SUCCESS, count=1)
+
+
+def test_memory_store_shared_by_threads_claims_each_job_once():
+    """The in-memory store is one SQLite ``:memory:`` connection that
+    every worker thread goes through: under fast thread switching each
+    job is still claimed once and every terminal write lands."""
+    import sys
+
+    store = JobStore()
+    n_jobs = 200
+    for i in range(n_jobs):
+        store.create(JobRecord(job_id=f"m{i}", task="t", queue="q"))
+    claimed: list[str] = []
+    lock = threading.Lock()
+
+    def drain(owner: str) -> None:
+        while (rec := store.claim(["q"], owner)) is not None:
+            with lock:
+                claimed.append(rec.job_id)
+            store.set_state(rec.job_id, SUCCESS, count=1)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=drain, args=(f"o{i}",))
+                   for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(old)
+    assert sorted(claimed) == sorted(f"m{i}" for i in range(n_jobs))
+    assert store.counts_by_state() == {SUCCESS: n_jobs}
+    store.close()

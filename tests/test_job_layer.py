@@ -306,7 +306,7 @@ def test_ttl_reaper_drops_jdbc_result_table(core, tmp_path):
         rec.finished_at = time.time() - 100
         rec.result_backend = "jdbc_cache"
         rec.result_path = backend.table_path("jdbc_reap")
-        core.store._jobs[rec.job_id] = rec
+        core.store.create(rec)
         assert "jdbc_reap" in core.reap_expired_results()
         with sqlite3.connect(db) as con:
             names = {
@@ -352,7 +352,7 @@ def test_reaper_survives_failing_and_unsupported_deletes(core):
             rec.finished_at = time.time() - 100
             rec.result_backend = backend
             rec.result_path = f"/nonexistent/{name}"
-            core.store._jobs[rec.job_id] = rec
+            core.store.create(rec)
         reaped = core.reap_expired_results()
         assert "reap_a" in reaped and "reap_c" in reaped  # loop never stalls
         assert "reap_b" not in reaped

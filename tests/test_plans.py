@@ -1756,3 +1756,21 @@ def test_plan_only_constructs_fate_frame_without_spark_jobs(spark, sf):
         "fuzzy_matched_bands",
     ]
     assert "Scan parquet" in plan or "Scan ExistingRDD" in plan
+
+
+def test_plan_only_ann_recall_calibration_runs_only_the_head_pull(spark, sf):
+    """Under plan_only() the exact arm of ann_recall_calibration takes
+    no checkpoint (even a lazy one materializes the shuffle stages
+    below it under AQE), so building the composed frame and rendering
+    its plan submits at most the one bounded head pull that defines
+    the probe frames."""
+    from dungbeetle_spark.operators.pipeline import plan_only
+    from dungbeetle_spark.queries import _t
+
+    _t(spark, sf, "embeddings")  # session-scoped table load
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with plan_only():
+        formatted_plan(_df(spark, sf, "ann_recall_calibration"))
+    new_jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert len(new_jobs) <= 1, sorted(new_jobs)
