@@ -209,6 +209,11 @@ class DBAPIBroker(BrokerBackend):
             "CREATE INDEX IF NOT EXISTS db_jobs_running "
             "ON db_jobs (owner) WHERE state = 'STARTED'"
         )
+        # the TTL reaper's seek: only rows with a result to reap
+        cur.execute(
+            "CREATE INDEX IF NOT EXISTS db_jobs_reaps "
+            "ON db_jobs (reaps_at) WHERE reaps_at IS NOT NULL"
+        )
         cur.execute(
             """
             CREATE TABLE IF NOT EXISTS db_groups (

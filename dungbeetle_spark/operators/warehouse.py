@@ -25,8 +25,8 @@ Every variant shares its fixture twin's oracle (the fate CTE in those
 oracles IS the spliced manifest), so the driver pins
 table-read ≡ replay value-for-value. The streaming gates' static
 reference state (canonical map, eval grams, fuzzy stop set + eval band
-index) is materialized the same way for the ``*_from_tables`` drain
-modes in ``streaming.stateful``.
+index) is materialized the same way for the fate, fuzzy and PII gate
+drains in ``streaming.stateful``.
 
 Materialization is cached per (process, sf_dir, table): the first
 consumer pays one job-layer write; every later consumer — including
@@ -329,10 +329,8 @@ def fate_reference_tables(
     tables — ``(canon, ev, fstops, fev)``. Production maintains these
     as refreshed tables (the gates' docstrings' claim); this
     materializes them through the job layer once per process so the
-    ``*_from_tables`` drain modes — and, since r15, the formerly
-    inline gates too (VERDICT r14 item 1, via
-    ``stateful.fate_gate_reference``) — measure the per-batch probe,
-    not the reference-state build (VERDICT r12 item 2).
+    gate drains (via ``stateful.fate_gate_reference``) measure the
+    per-batch probe, not the reference-state build.
 
     r15 (guide §2.6): the canon / eval-gram / stop-set builds are
     mutually independent, so their job-layer builds overlap on

@@ -20,9 +20,6 @@ bit-stable; everything else is).
 
 from __future__ import annotations
 
-import json
-import os
-import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -55,192 +52,6 @@ def query(name: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
-# The driver's CORRECTNESS harness verifies the FIRST 50 registry
-# entries per round (registration order). Since r09 that window is
-# COMPUTED, not hand-rotated: ``NEW_OR_CHANGED`` below is the only
-# hand-maintained list (queries added this round, or whose Spark code
-# or oracle SQL materially changed), and ``driver_priority()`` ranks
-# everything else from the recorded CORRECTNESS_r*.json driver rows —
-# never-green first, then oldest-green, name as the tie-break. Adding
-# or changing a query therefore touches exactly this one list; the
-# stale-repayment rotation happens by construction every round.
-NEW_OR_CHANGED: list[str] = [
-    # r14 budget note: keep this list small — the 14 r09-stale entries
-    # must fit the 50-slot window so the last-green floor moves to r10
-    # (VERDICT r13 item 4).
-    #
-    # r14 changed (VERDICT r13 item 5): the >1M-row LSH failover path
-    # gained the leader-star bucket-density cap + truncated_buckets
-    # audit (mirroring _capped_band_pairs). The driver-exercised exact
-    # path is untouched; the registry body changed one line (tuple
-    # unpack), so it rides the window per the any-code-change rule.
-    "dedup_embedding_cosine",
-    # r14 new (VERDICT r13 item 3): the fate delta executor family —
-    # incremental reference maintenance (DF-count deltas; oracle
-    # rebuilds from scratch, so the value gate IS the incremental ≡
-    # rebuild pin) and the plan executor (oracle is the full fate
-    # oracle over the evolved corpus: assembled ≡ recompute).
-    "fate_reference_maintenance",
-    "fate_apply_plan",
-    # r14 new (r15 candidate 1 pulled forward): the SHIP step — the
-    # assembled manifest written as the next results_<job_id> table,
-    # consumed by the datacard; oracle = datacard over a full evolved
-    # recompute, so ship-and-consume ≡ recompute end to end.
-    "fate_deploy_cycle",
-    # r14 new (r15 candidate 2 pulled forward): the re-export plan
-    # with ZERO fate replays — prev from the shipped export manifest,
-    # curr membership from the delta-shipped next fate manifest;
-    # oracle replays both exports relationally.
-    "shard_export_diff_delta",
-    # r14 new: the incremental re-export EXECUTOR — clean shards
-    # copied from the shipped export manifest, dirty shards (fate
-    # flips between shipped manifests + changelog edits, a no-text
-    # id computation) re-exported; oracle = full export replay LEFT
-    # JOIN a relational dirty-shard derivation, pinning digests AND
-    # copy/reexport decisions.
-    "shard_export_apply_delta",
-    # r14 new: the nightly diff between two SHIPPED export manifests
-    # (prev deployment's table vs the delta-assembled table the
-    # rollover just shipped) — zero corpus reads at query time;
-    # oracle = the full relational two-replay diff.
-    "shard_export_diff_shipped",
-    # r14 new: delta refresh of the FOURTH gate reference — the canon
-    # map, re-elected over touched hashes from the shipped membership
-    # table; oracle rebuilds the map from the evolved corpus.
-    "canon_map_maintenance",
-    # r14 new: the post-rollover ingest gate — make_fate_gate_batch
-    # over the four DELTA-refreshed reference tables, draining the
-    # shipped evolved snapshot; oracle = the full composed fate
-    # oracle over the evolved corpus.
-    "streaming_fate_gate_rollover",
-    # DELIBERATELY OFF this list (r14): r13's nine new entries (the
-    # warehouse variants, table-backed gates, churn/datacard deltas,
-    # recompute planner) all carry green r13 driver rows and are
-    # untouched this round — they rotate into the stale queue like
-    # everything else. The streaming bench rework (fresh-session
-    # drains) and the warehouse cache hatch touched no query's plan or
-    # oracle. ALSO off (r14 review): the export/interleave family
-    # whose only change was the shuffle key moving to the shared
-    # curation.ilv_okey helper — pure code motion, expression
-    # byte-identical (pinned by
-    # test_r14_operators.test_ilv_okey_is_the_export_key, and the
-    # family re-checked value-level against DuckDB at sf0.01 after
-    # the refactor); listing ~10 unchanged-behavior queries would
-    # displace a round of stale repayments for zero verification
-    # value.
-    #
-    # ALSO off (r14 OPTIMIZATION round): the fate-frame plan
-    # restructure (pipeline._fate_frame and the funnel_verdicts
-    # extra-columns fold at its five call sites) — every output is
-    # value-identical by construction (same expressions, fewer
-    # exchanges: the verdict re-scan+join became one projection, the
-    # canonical election became a window over the same key, the three
-    # reference chains materialize concurrently). The whole touched
-    # family was re-compared value-level against DuckDB at sf0.01 on
-    # a PLAIN driver-style session after the restructure (16 queries
-    # incl. both streaming gates), and the full oracle suite re-ran
-    # green; the optimization-round driver re-oracles every declared
-    # query regardless, so window slots stay with stale repayment.
-    #
-    # ALSO off (r15 OPTIMIZATION round, same precedent): the r15
-    # fate-frame restructure (election folded into a conditional-min
-    # window, containment grams exploded after the surv2 join), the
-    # inline streaming gates' reference state moving to the job-layer
-    # result tables (VERDICT r14 item 1 — the per-batch decision
-    # functions are byte-identical; only WHO builds the reference
-    # frames changed, and the table builders are the same frames),
-    # and the ann_recall_calibration shared-pull refactor — all
-    # value-identical by construction and re-compared value-level
-    # against DuckDB at sf0.01 on a PLAIN driver-style session after
-    # each change (20 touched queries incl. all five gates).
-]
-
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _green_rows(path: str) -> set[str]:
-    """Names with a full (rows+schema+hash) green row in one recorded
-    CORRECTNESS_r*.json driver artifact."""
-    with open(path) as f:
-        data = json.load(f)
-    return {
-        name
-        for name, row in data.items()
-        if isinstance(row, dict)
-        and row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match")
-    }
-
-
-_GREEN_ROUNDS_CACHE: dict[tuple, dict[int, set[str]]] = {}
-
-
-def _green_rounds(repo: str) -> dict[int, set[str]]:
-    """Parsed CORRECTNESS_r*.json green sets, memoized on the file
-    list + mtimes: registry() recomputes the window ordering on every
-    call (tests, tools, bench all call it repeatedly) and the
-    artifacts are immutable within a process, so re-reading 8+ JSON
-    files per call was pure waste (r09 review finding). A new or
-    rewritten artifact invalidates the key."""
-    files = sorted(
-        (fn, os.path.getmtime(os.path.join(repo, fn)))
-        for fn in os.listdir(repo)
-        if re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fn)
-    )
-    key = (repo, tuple(files))
-    cached = _GREEN_ROUNDS_CACHE.get(key)
-    if cached is None:
-        cached = {
-            int(re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fn).group(1)):
-                _green_rows(os.path.join(repo, fn))
-            for fn, _ in files
-        }
-        _GREEN_ROUNDS_CACHE.clear()  # one live key per repo is plenty
-        _GREEN_ROUNDS_CACHE[key] = cached
-    return cached
-
-
-def last_green_by_query(
-    names: list[str] | None = None, repo: str = _REPO_ROOT
-) -> dict[str, int | None]:
-    """query -> latest round with a full hash-green driver row (None =
-    never driver-verified green). Single source of truth for the
-    window rotation: ``driver_priority()``, ``tools/window_rotation.py``
-    and ``tests/test_registry_window.py`` all read this."""
-    if names is None:
-        _import_operator_modules()
-        names = list(_REGISTRY)
-    rounds = _green_rounds(repo)
-    last: dict[str, int | None] = {name: None for name in names}
-    for rnd in sorted(rounds):
-        for name in rounds[rnd]:
-            if name in last:
-                last[name] = rnd
-    return last
-
-
-def driver_priority() -> list[str]:
-    """The full registry ordering: NEW_OR_CHANGED first (hand order),
-    then every other query ranked stalest-first from the recorded
-    driver rows. Deterministic given the artifact files; with no
-    artifacts present (fresh clone) it degrades to NEW_OR_CHANGED +
-    alphabetical."""
-    _import_operator_modules()
-    unknown = [n for n in NEW_OR_CHANGED if n not in _REGISTRY]
-    if unknown:
-        raise ValueError(f"NEW_OR_CHANGED names not in registry: {unknown}")
-    last = last_green_by_query()
-    head = list(dict.fromkeys(NEW_OR_CHANGED))
-    head_set = set(head)
-    rest = sorted(
-        (n for n in _REGISTRY if n not in head_set),
-        key=lambda n: (last[n] is not None, last[n] or 0, n),
-    )
-    return head + rest
-
-
 def _import_operator_modules() -> None:
     """Import every operator module for its @query side effects."""
     import dungbeetle_spark.operators.analytic  # noqa: F401
@@ -263,11 +74,9 @@ def _import_operator_modules() -> None:
 
 
 def registry() -> dict[str, QuerySpec]:
-    """All registered specs, ordered by ``driver_priority()`` so the
-    driver's 50-entry correctness window lands on the queries that
-    most need a verification row."""
+    """All registered specs, in registration order."""
     _import_operator_modules()
-    return {name: _REGISTRY[name] for name in driver_priority()}
+    return dict(_REGISTRY)
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -451,9 +451,8 @@ def fate_gate_reference(sess: SparkSession, sf_dir: str):
     reps inside a bench cell, in a cold fresh session — which is a
     fixture artifact, not the production shape: an ingest service
     builds its references once per deployment and probes them per
-    batch (exactly what the ``*_from_tables`` twins always measured).
-    The inline gates now read the same four tables; their timed cells
-    are per-batch PROBE cost plus four bounded table scans, and the
+    batch. The gates read these four tables; their timed cells are
+    per-batch PROBE cost plus four bounded table scans, and the
     one-time reference build rides the bench's untimed
     ``materialization_setup_sec`` path. Value-identical by
     construction: the table builders are the very frames this
@@ -901,81 +900,6 @@ def make_pii_gate_batch(
     return gate_batch
 
 
-# -- table-backed drain modes (r13, VERDICT r12 item 2) -----------------------
-
-
-@query(
-    "streaming_fate_gate_from_tables",
-    oracle=_fate_oracle(),  # the batch manifest's oracle, verbatim
-    doc="streaming_corpus_fate_gate with its static reference state "
-    "READ FROM MATERIALIZED RESULT TABLES (VERDICT r12 item 2) — the "
-    "canonical map, eval-gram set, fuzzy stop set, and eval band "
-    "index come from operators.warehouse.fate_reference_tables (each "
-    "a job-layer results_<job_id> table, materialized once per "
-    "process), so the drain measures what the production claim is "
-    "about: the per-batch broadcast-probe pipeline, not the per-run "
-    "reference-state rebuild. The per-batch decision is "
-    "make_fate_gate_batch VERBATIM and the oracle is the composed "
-    "batch oracle, so the driver pins tables-mode ≡ inline-mode ≡ "
-    "batch manifest value-for-value.",
-)
-def streaming_fate_gate_from_tables(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Scale shape: identical to streaming_corpus_fate_gate's
-    per-batch profile (codegen verdicts, h-keyed canonical probe,
-    staged gram/fuzzy work for survivors only); the reference state is
-    four bounded parquet scans per batch instead of a corpus-scale
-    rebuild per RUN — in production those tables are maintained by the
-    manifest materialization task and refreshed on corpus rollover,
-    which is exactly the shape this query executes."""
-    from dungbeetle_spark.operators.warehouse import fate_reference_tables
-    from dungbeetle_spark.streaming.source import stream_table
-
-    stream = stream_table(spark, sf_dir, "documents")
-    canon, ev, fstops, fev = fate_reference_tables(
-        stream.sparkSession, sf_dir
-    )
-    return drain_to_df(
-        stream.select("doc_id", "text", "lang"),
-        "stream_fate_gate_tables",
-        "append",
-        transform=make_fate_gate_batch(canon, ev, fstops, fev),
-    )
-
-
-@query(
-    "streaming_pii_gate_from_tables",
-    oracle=_pii_gate_oracle(),  # the inline gate's oracle, verbatim
-    doc="streaming_pii_redaction_gate with the fate gate's reference "
-    "state read from the materialized result tables "
-    "(operators.warehouse.fate_reference_tables) — the table-backed "
-    "drain mode for the release gate (VERDICT r12 item 2). Per-batch "
-    "decision is make_pii_gate_batch verbatim; oracle shared with the "
-    "inline gate, so the driver pins tables-mode ≡ inline-mode.",
-)
-def streaming_pii_gate_from_tables(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Scale shape: streaming_pii_redaction_gate's per-batch profile
-    (the fate decision + one codegen regexp projection over the
-    batch's kept docs); reference state from bounded parquet scans —
-    see streaming_fate_gate_from_tables."""
-    from dungbeetle_spark.operators.warehouse import fate_reference_tables
-    from dungbeetle_spark.streaming.source import stream_table
-
-    stream = stream_table(spark, sf_dir, "documents")
-    canon, ev, fstops, fev = fate_reference_tables(
-        stream.sparkSession, sf_dir
-    )
-    return drain_to_df(
-        stream.select("doc_id", "text", "lang", "source"),
-        "stream_pii_gate_tables",
-        "append",
-        transform=make_pii_gate_batch(canon, ev, fstops, fev),
-    )
-
-
 # -- rollover drain mode (r14): serve against the delta-refreshed refs --------
 
 
@@ -1015,7 +939,7 @@ def streaming_fate_gate_rollover(spark: SparkSession, sf_dir: str) -> DataFrame:
     work for survivors only); the reference state is four bounded
     parquet scans of tables the rollover maintained by DELTA — no
     stage anywhere in this query's lineage ever recomputed a
-    corpus-scale reference (compare streaming_fate_gate_from_tables,
+    corpus-scale reference (compare streaming_corpus_fate_gate,
     whose tables were built by full-corpus jobs)."""
     from dungbeetle_spark.operators.fate_delta import (
         evolved_docs_table,

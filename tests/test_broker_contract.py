@@ -953,6 +953,32 @@ def test_heartbeat_seeks_running_index(tmp_path):
         store.close()
 
 
+def test_reaper_seeks_reaps_index(tmp_path):
+    """The TTL reaper's SELECT seeks ``db_jobs_reaps`` (rows with a
+    ``reaps_at`` only) instead of reading every row of the history."""
+    import sqlite3
+
+    db = str(tmp_path / "jobs.db")
+    store = JobStore(persist_path=db, recover="attach")
+    store.create(JobRecord(job_id="j", task="t", queue="q", ttl=5.0))
+    store.set_state("j", SUCCESS, count=1, result_path="/r")
+    statements: list[str] = []
+    store._backend._db.set_trace_callback(statements.append)
+    reaped = store.expired(now=store.get("j").finished_at + 6.0)
+    assert [r.job_id for r in reaped] == ["j"]
+    store._backend._db.set_trace_callback(None)
+    (sql,) = [s for s in statements if "reaps_at <=" in s]
+    con = sqlite3.connect(db)
+    try:
+        plan = " | ".join(
+            row[3] for row in con.execute("EXPLAIN QUERY PLAN " + sql)
+        )
+        assert "db_jobs_reaps" in plan, plan
+    finally:
+        con.close()
+        store.close()
+
+
 @pytest.mark.parametrize("on_file", [False, True])
 def test_closed_store_refuses_writes(tmp_path, on_file):
     """After ``close()`` a write raises: it must not report success for

@@ -2,10 +2,10 @@
 
 The rewrites (word_ngrams zip_with fold, hof_let window binding) must
 stay EXACTLY output-equivalent to their straightforward
-transform(sequence, ...) forms — that equivalence is what justified
-keeping every touched query out of NEW_OR_CHANGED. These tests pin it
-on constructed edge cases so a future refactor can't drift the
-semantics while chasing the same performance class.
+transform(sequence, ...) forms — the touched queries' outputs rest on
+that equivalence. These tests pin it on constructed edge cases so a
+future refactor can't drift the semantics while chasing the same
+performance class.
 """
 
 from __future__ import annotations

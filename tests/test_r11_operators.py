@@ -138,8 +138,8 @@ def test_driver_fixture_itself_trips_the_cap(spark, sf_oracle):
     sf0.01 verification, not only by planted tests: the seeded
     template family's corpus buckets exceed the cap there (measured
     50 > 32 at r11). If the corpus generator ever shifts below the
-    cap, this pin fails and the operator belongs back in
-    NEW_OR_CHANGED review."""
+    cap, this pin fails and the capped path needs a fixture of its
+    own."""
     row = (
         SPECS["dedup_minhash_incremental"]
         .build(spark, sf_oracle)
@@ -217,12 +217,11 @@ def test_gate_flags_superset_of_confirmed_near_dups(spark, sf_oracle):
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.01", "/root/testdata/sf0.1"])
 def test_organic_band_buckets_stay_under_cap(sf_dir):
-    """minhash_calibration shares the capped candidate path but was
-    (r10) deliberately left out of NEW_OR_CHANGED on the premise that
-    ORGANIC band buckets never reach the cap at the driver's scale
-    factors — pin that premise (ADVICE r10): if the corpus generator
-    ever densifies past the cap, this fails loudly instead of the
-    recorded green hash silently going stale."""
+    """minhash_calibration shares the capped candidate path and relies
+    on the premise (r10) that ORGANIC band buckets never reach the cap
+    at the sf0.01 and sf0.1 fixtures — pin that premise (ADVICE r10):
+    if the corpus generator ever densifies past the cap, this fails
+    loudly instead of the recorded green hash silently going stale."""
     con = duckdb.connect()
     [(max_bn,)] = con.execute(
         f"""

@@ -651,28 +651,3 @@ def test_fate_manifest_matches_brute_force_on_random_corpora(
         for r in SPECS["corpus_fate_manifest"].build(spark, str(out)).collect()
     }
     assert got == expected
-
-
-# -- bench canary freeze contract ----------------------------------------------
-
-
-def test_bench_canaries_run_and_are_frozen(spark, sf_smoke):
-    """The two text-class canaries must (a) execute and produce the
-    per-source rows bench.py times, and (b) NEVER change: a canary
-    that changes measures the code, not the host — the exact artifact
-    class (r10/r11 normalization whipsaw) they exist to prevent. The
-    md5 pin makes the freeze contract mechanical; if you edited
-    bench_canary.py deliberately, you re-based the host anchors and
-    must re-derive CANARY_TEXT_* constants, not just update this
-    hash."""
-    import hashlib
-
-    import dungbeetle_spark.bench_canary as bc
-
-    for name, fn in bc.TEXT_CANARIES.items():
-        rows = fn(spark, sf_smoke).collect()
-        assert len(rows) > 0, name
-    src = open(bc.__file__.replace(".pyc", ".py"), "rb").read()
-    assert (
-        hashlib.md5(src).hexdigest() == "e6cce6347843b4ef2c0fc5b2982a18da"
-    ), "bench_canary.py is FROZEN (see its module docstring)"

@@ -5,7 +5,7 @@ Run from the repo root whenever the registry changes:
 
     python tools/gen_operators.py
 
-tests/test_registry_window.py::test_operators_md_in_sync fails the
+tests/test_queries_oracle.py::test_operators_md_in_sync fails the
 suite when the file drifts from ``registry()``, so a registry-touching
 commit that forgets to regenerate cannot land green.
 """
@@ -23,15 +23,8 @@ Auto-generated by `tools/gen_operators.py` from
 `dungbeetle_spark.queries.registry()`. Every entry is callable as
 `queries()[name](spark, sf_dir)` via `__spark_entry__.py`; **oracle** =
 value-checked against DuckDB at sf0.01, **rows-only** = deterministic
-execution check. Rows are in stable name order so this file depends
-only on the registry itself — NOT on which CORRECTNESS_r*.json driver
-artifacts happen to exist (the driver drops each round's artifact
-*after* the round's last commit, so an artifact-dependent rendering
-was stale at the start of every round by construction; VERDICT r09
-item 1). The driver's per-round 50-entry CORRECTNESS window is the
-first 50 entries of `queries()` (computed by
-`queries.driver_priority()`); inspect it with
-`python tools/window_rotation.py`.
+execution check. Rows are in stable name order, so this file depends
+only on the registry's contents.
 
 | # | Query | Check | What it demonstrates |
 |---|---|---|---|

@@ -61,16 +61,6 @@ EXECUTING = {
         "gate + kept-doc PII projection; the per-batch plan is "
         "batch-local by design"
     ),
-    "streaming_fate_gate_from_tables": (
-        "executes at build() — the fate gate's drain with reference "
-        "state read from materialized result tables; per-batch plan "
-        "identical to streaming_corpus_fate_gate's"
-    ),
-    "streaming_pii_gate_from_tables": (
-        "executes at build() — the PII gate's drain with reference "
-        "state read from materialized result tables; per-batch plan "
-        "identical to streaming_pii_redaction_gate's"
-    ),
     "streaming_fate_gate_rollover": (
         "executes at build() — the post-rollover fate gate's drain "
         "over the shipped evolved snapshot with the four "

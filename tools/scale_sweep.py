@@ -149,10 +149,6 @@ SWEEP_OPS = [
     ("fate_churn_summary", None),  # table prev + one evolved fate plan
     ("release_datacard_diff", None),  # table prev + one evolved fate plan
     ("fate_recompute_plan", None),  # table scans + touched-docs-only text work
-    # r13 table-backed gate drains: per-batch probe against parquet
-    # reference tables — the static-build term is out of the cell
-    ("streaming_fate_gate_from_tables", None),
-    ("streaming_pii_gate_from_tables", None),
     # r14 delta family: maintenance scales with the delta (the touched
     # docs are a fixed FRACTION of the amplified corpus here, so the
     # exponent prices the delta-proportional merge, not a rescan);
@@ -176,7 +172,7 @@ SWEEP_OPS = [
 # Ops whose sweep rows read the pre-materialized warehouse tables,
 # mapped to exactly the tables each opens (ADVICE r13: materialize
 # only the union the chosen ops need). Mirror of bench._MAT_TABLES,
-# pinned equal by test_bench_compare.
+# pinned equal by tests/test_bench.py.
 _WAREHOUSE_TABLES = {
     "shard_export_from_manifest": ("manifest",),
     "pii_audit_from_manifest": ("manifest",),
@@ -185,11 +181,8 @@ _WAREHOUSE_TABLES = {
     "fate_churn_summary": ("manifest",),
     "release_datacard_diff": ("manifest",),
     "fate_recompute_plan": ("seeded_manifest", "seeded_canon"),
-    "streaming_fate_gate_from_tables": ("fate_reference",),
-    "streaming_pii_gate_from_tables": ("fate_reference",),
-    # r15 (VERDICT r14 item 1): the formerly inline gates read the
-    # same reference tables — their drain cells are probe-only, the
-    # one-time build rides this untimed path.
+    # the gates read the reference tables — their drain cells are
+    # probe-only, the one-time build rides this untimed path.
     "streaming_corpus_fate_gate": ("fate_reference",),
     "streaming_pii_redaction_gate": ("fate_reference",),
     "streaming_fuzzy_decon_gate": ("fate_reference",),
@@ -585,7 +578,7 @@ def run_sweep(
     dirs = {f: build_amplified(spark, f) for f in needed}
 
     # r13: pre-materialize the warehouse result tables per factor dir
-    # when any *_from_manifest / *_from_tables op is in the batch, so
+    # when any warehouse-reading op (_WAREHOUSE_TABLES) is in the batch, so
     # those rows measure the table-READ path (the warehouse claim);
     # the one-time build cost is printed per factor, mirroring bench's
     # materialization_setup_sec split.
