@@ -35,7 +35,7 @@ import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 from dungbeetle_spark import jobstore
 from dungbeetle_spark.jobstore import JobRecord, JobStore
@@ -402,20 +402,20 @@ class Core:
         )
         self.store.create(rec)  # atomic single-flight check (jobstore)
         q = self._ensure_queue(queue_name, task.conc or self.worker_concurrency)
-        if self.distributed:
-            # The INSERT above IS the enqueue: any process claiming
-            # this queue (this one included) will pick the job up; the
-            # claim itself filters on ETA, so no local timer.
-            pass
-        elif eta_ts is not None and eta_ts > time.time():
+        if eta_ts is None or eta_ts <= time.time():
+            # Distributed: the INSERT above IS the enqueue; submitting
+            # only wakes a local claim thread, so the job does not wait
+            # for the next poll (other processes keep polling).
+            self._submit(q, job_id)
+        elif not self.distributed:
             delay = eta_ts - time.time()
             timer = threading.Timer(delay, lambda: self._submit(q, job_id))
             timer.daemon = True
             with self._lock:
                 self._timers[job_id] = timer
             timer.start()
-        else:
-            self._submit(q, job_id)
+        # (a distributed job with a future ETA needs no timer: the claim
+        # itself filters on ETA)
         return JobResp(
             job_id=job_id,
             task=task_name,
@@ -654,6 +654,26 @@ class Core:
             )
         return compact(self.spark, job_id, target_files)
 
+    def read_result_rows(self, job_id: str, limit: int) -> tuple[list[str], list[Row]]:
+        """``(columns, rows)`` of the first ``limit`` rows of a job's
+        result, as ``read_result(job_id).limit(limit).collect()`` gives
+        them. A single-file parquet table is read on the driver
+        (``ParquetResultBackend.head``), which skips a Spark read of
+        two jobs; any other table goes through Spark."""
+        rec = self.store.get(job_id)
+        if not rec.result_path:
+            raise ValueError(f"job {job_id} has no results (state={rec.state})")
+        try:
+            backend = self.result_backends.get(rec.result_backend)
+        except KeyError:
+            backend = None
+        if isinstance(backend, ParquetResultBackend):
+            head = backend.head(job_id, limit)
+            if head is not None:
+                return head
+        df = self.read_result(job_id).limit(limit)
+        return df.columns, df.collect()
+
     def read_result(self, job_id: str) -> DataFrame:
         rec = self.store.get(job_id)
         if not rec.result_path:
@@ -701,6 +721,8 @@ class _ClaimPool:
         self._owner = owner
         self._lease = lease
         self._stop = threading.Event()
+        self._wake = threading.Condition()
+        self._submits = 0  # submit() calls so far; guards lost wake-ups
         self._threads: list[threading.Thread] = []
         for i in range(concurrency):
             t = threading.Thread(
@@ -710,14 +732,19 @@ class _ClaimPool:
             self._threads.append(t)
 
     def submit(self, job_id: str) -> None:
-        """No-op: the store INSERT already enqueued the job; claim
-        threads will find it on their next poll."""
+        """Wake one idle claim thread: the store INSERT already enqueued
+        the job, so a claim now finds it without waiting for a poll."""
+        with self._wake:
+            self._submits += 1
+            self._wake.notify()
 
     def backlog(self) -> int:
         return len(self._store.pending(self.name))
 
     def _worker(self) -> None:
         while not self._stop.is_set():
+            with self._wake:
+                seen = self._submits
             try:
                 rec = self._store.claim(
                     [self.name], self._owner, lease=self._lease
@@ -725,7 +752,12 @@ class _ClaimPool:
             except Exception:  # noqa: BLE001 — transient store contention
                 rec = None
             if rec is None:
-                self._stop.wait(self._poll)
+                # sleep one poll unless a submit came in since the claim
+                # began (its job may have been inserted after the claim
+                # read the queue)
+                with self._wake:
+                    if self._submits == seen and not self._stop.is_set():
+                        self._wake.wait(self._poll)
                 continue
             try:
                 self._run(self.name, rec.job_id)
@@ -740,6 +772,8 @@ class _ClaimPool:
 
     def stop(self) -> None:
         self._stop.set()
+        with self._wake:
+            self._wake.notify_all()
 
     def join(self, timeout: float) -> bool:
         deadline = time.monotonic() + timeout

@@ -205,12 +205,15 @@ class _Handler(BaseHTTPRequestHandler):
                 limit = max(0, min(int(q.get("limit", "100") or "100"), 10_000))
             except ValueError:
                 raise APIError("`limit` must be an integer", 400) from None
-            df = core.read_result(parts[1]).limit(limit)
-            rows = [
-                {k: _jsonable(v) for k, v in r.asDict(recursive=True).items()}
-                for r in df.collect()
-            ]
-            return {"job_id": parts[1], "columns": df.columns, "rows": rows}
+            columns, rows = core.read_result_rows(parts[1], limit)
+            return {
+                "job_id": parts[1],
+                "columns": columns,
+                "rows": [
+                    {k: _jsonable(v) for k, v in r.asDict(recursive=True).items()}
+                    for r in rows
+                ],
+            }
         if method == "POST" and len(parts) == 3 and parts[0] == "jobs" and parts[2] == "compact":
             # Engine extension (no reference analog — its SQL results
             # live in external DBs): rewrite the job's result table to

@@ -8,27 +8,49 @@ sqldb.go:230-305; README "Results"). Schema generation is cached per
 task name (sqldb.go:38-41, 147-153) and every job DROPs + re-CREATEs
 its own table (sqldb.go:179-186) — i.e. overwrite semantics.
 
-Spark-first mapping: the whole row-at-a-time INSERT pipeline
-(core.go:556-565, sqldb.go:195-207 — one INSERT per row in one tx)
-collapses to a single columnar write::
+Spark-first mapping: the row-at-a-time INSERT pipeline (core.go:556-565,
+sqldb.go:195-207 — one INSERT per row in one tx) becomes one of two
+columnar writers, chosen per job from the optimized plan before
+anything runs:
 
-    df.select(*canonical_casts).write.mode("overwrite").parquet(path)
+- **Driver-side Arrow write** for small results. When the plan's
+  size estimate is within ``spark.sql.autoBroadcastJoinThreshold``
+  (Spark's own bound for "small enough to collect to the driver"; -1
+  turns the path off), the plan holds no row-multiplying node whose
+  estimate cannot be trusted (``Generate``, Python map/flat-map,
+  Python UDTF), the task has no ``partition_by`` and the warehouse is
+  a local path, the result is collected with ``toArrow()`` and
+  written by ``pyarrow`` as one ``part-00000-…`` file carrying Spark's
+  row-schema metadata, so Spark, ``compact`` and the TTL reaper read
+  and delete it like any other table. A Spark write costs a fixed
+  ~0.1 s of job set-up and commit protocol that dwarfs a 30-row
+  result.
+- **Spark's parquet writer** for everything else::
 
-which is parallel, compressed, and scales to any cluster size; the
-"one transaction per result set" property maps to parquet's
-atomic-enough directory swap (same guarantee level as the reference's
-DROP+CREATE window).
+      df.select(*canonical_casts).write.mode("overwrite").parquet(path)
+
+  which is parallel, compressed, and scales to any cluster size.
+
+Either way the "one transaction per result set" property maps to a
+directory swap (same guarantee level as the reference's DROP+CREATE
+window). ``head`` is the matching reader: a single-file table is read
+on the driver with ``pyarrow`` and its rows are built exactly as
+Spark's ``collect`` builds them.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import random
 import re
 import shutil
 import threading
+import uuid
 from collections.abc import Iterable, Mapping
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -79,6 +101,67 @@ def canonical_cast(df: DataFrame) -> DataFrame:
 
 
 _TABLE_RE = re.compile(r"%s")
+
+# Footer keys of Spark's parquet writer (ParquetWriteSupport): the
+# Catalyst schema as JSON; the writer's version, without which Spark
+# applies its configured calendar-rebase mode to the file's dates; and
+# the markers of a file written with the legacy hybrid calendar.
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_VERSION_METADATA = b"org.apache.spark.version"
+_LEGACY_CALENDAR = (b"org.apache.spark.legacyDateTime", b"org.apache.spark.legacyINT96")
+
+# Plan nodes that can emit more rows than their input while the
+# optimizer estimates their output from the input alone: a plan holding
+# one may be far larger than its size estimate says.
+_UNBOUNDED_NODES = re.compile(r"Generate|MapInPandas|MapInArrow|FlatMap\w*|\w*PythonUDTF")
+
+
+def _is_local(path: str) -> bool:
+    """Whether ``path`` is a plain local path, not a URI (``s3a://``,
+    ``hdfs://``, ``file:``...) that the driver cannot open as a file."""
+    return not urlparse(path).scheme
+
+
+def _internal(t):
+    """The Arrow type holding ``t``'s values as Spark holds them inside —
+    timestamps as int64 microseconds, dates as int32 days — for
+    ``StructType.fromInternal``; None for a type the driver-side read
+    leaves to Spark (struct, map, timestamps not in microseconds)."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        return pa.int64() if t.unit == "us" else None
+    if pa.types.is_date32(t):
+        return pa.int32()
+    if pa.types.is_list(t):
+        inner = _internal(t.value_type)
+        return None if inner is None else pa.list_(t.value_field.with_type(inner))
+    return None if pa.types.is_nested(t) else t
+
+
+def _fits_driver(out: DataFrame) -> bool:
+    """Whether ``out``'s optimized plan is estimated small enough to
+    collect to the driver: within ``spark.sql.autoBroadcastJoinThreshold``
+    (-1 = never) and free of nodes whose estimate cannot be trusted.
+    Decided before anything runs; ``toArrow`` then reuses the plan."""
+    jdf = out._jdf
+    bound = jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
+    if bound < 0:
+        return False
+    plan = jdf.queryExecution().optimizedPlan()
+    if int(plan.stats().sizeInBytes()) > bound:
+        return False
+    # Walk node names rather than parse ``treeString()``: that prints
+    # every literal in full, and a constant-folded array can make it
+    # larger than the driver's heap.
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        if _UNBOUNDED_NODES.fullmatch(node.nodeName()):
+            return False
+        children = node.children()
+        nodes.extend(children.apply(i) for i in range(children.size()))
+    return True
 
 
 class ParquetResultBackend:
@@ -132,28 +215,99 @@ class ParquetResultBackend:
         """Canonical-cast + overwrite ``results_<job_id>``; return rowcount.
 
         The row count is the job's only "result" payload, surfaced by
-        status polls (core.go:436, 183-190). It comes from an
-        ``Observation`` on the write pass itself — rows are counted as
-        they stream through the writer, so there is no second scan of
-        the result (and no recompute of the query): the 100 TB-correct
-        way to get write metrics.
+        status polls (core.go:436, 183-190). It comes from the data
+        that was written, never from a second scan of the result (nor
+        a recompute of the query): the Arrow table's length on the
+        driver-side path, an ``Observation`` on the write pass itself
+        on Spark's writer — the 100 TB-correct way to get write
+        metrics.
         """
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        out = canonical_cast(df).observe(obs, F.count(F.lit(1)).alias("n"))
+        out = canonical_cast(df)
         with self._lock:
             self._schemas.setdefault(task_name, out.schema)
         path = self.table_path(job_id)
-        writer = out.write.mode("overwrite")
         cols = list(partition_by)
+        if not cols and _is_local(path) and _fits_driver(out):
+            return self._write_arrow(out, path)
+
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        writer = out.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
         if cols:
             writer = writer.partitionBy(*cols)
         writer.parquet(path)
         return int(obs.get["n"])
 
+    def _write_arrow(self, out: DataFrame, path: str) -> int:
+        """Collect ``out`` to the driver and write it as one parquet
+        file in Spark's layout, swapped into ``path`` like ``compact``
+        swaps (a retry overwrites; serialized against delete/reaper)."""
+        import pyarrow.parquet as pq
+
+        table = out.toArrow().replace_schema_metadata({
+            _ROW_METADATA: out._jdf.schema().json(),
+            _VERSION_METADATA: out.sparkSession.version,
+        })
+        token = uuid.uuid4()
+        tmp = f"{path}__writing_{token.hex[:8]}"
+        old = f"{path}__old_{token.hex[:8]}"
+        os.makedirs(tmp)
+        try:
+            pq.write_table(
+                table, f"{tmp}/part-00000-{token}-c000.snappy.parquet",
+                compression="snappy",
+            )
+            with self._lock:
+                if os.path.exists(path):
+                    os.rename(path, old)
+                os.rename(tmp, path)
+                shutil.rmtree(old, ignore_errors=True)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        return table.num_rows
+
     def read(self, spark: SparkSession, job_id: str) -> DataFrame:
         return spark.read.parquet(self.table_path(job_id))
+
+    def head(self, job_id: str, limit: int) -> tuple[list[str], list[Row]] | None:
+        """``(columns, rows)`` of the first ``limit`` rows, equal to
+        ``read(spark, job_id).limit(limit)`` collected, read on the
+        driver with ``pyarrow``; None when the table is not a local
+        directory holding exactly one data file with Spark's schema.
+
+        One file only: Spark orders the splits of a multi-file table
+        by size, so its first rows need not be the files' first rows.
+        The rows are built by Spark's own ``StructType.fromInternal``
+        from the stored values (timestamps as UTC microseconds, which
+        covers Arrow-written and INT96 columns alike), so timestamps
+        come out naive in local time as ``collect`` returns them.
+        """
+        import pyarrow.parquet as pq
+
+        path = self.table_path(job_id)
+        if not _is_local(path) or not os.path.isdir(path):
+            return None
+        names = [n for n in os.listdir(path) if not n.startswith(("_", "."))]
+        if len(names) != 1 or not os.path.isfile(f"{path}/{names[0]}"):
+            return None
+        pf = pq.ParquetFile(f"{path}/{names[0]}", coerce_int96_timestamp_unit="us")
+        meta = pf.schema_arrow.metadata or {}
+        internal = [_internal(f.type) for f in pf.schema_arrow]
+        if (
+            _ROW_METADATA not in meta
+            or any(k in meta for k in _LEGACY_CALENDAR)
+            or None in internal
+        ):
+            return None
+        schema = T.StructType.fromJson(json.loads(meta[_ROW_METADATA]))
+        rows: list[Row] = []
+        for batch in pf.iter_batches(batch_size=limit) if limit > 0 else ():
+            cols = [c.cast(t).to_pylist() for c, t in zip(batch.columns, internal)]
+            rows.extend(schema.fromInternal(v) for v in zip(*cols))
+            if len(rows) >= limit:
+                break
+        return schema.names, rows[:limit]
 
     def delete(self, job_id: str) -> None:
         with self._lock:  # serialize vs a concurrent compact's swap

@@ -185,6 +185,31 @@ def test_eta_holds_job_from_claimers(spark, sf_smoke, tmp_path):
         core.stop()
 
 
+def test_posted_job_wakes_local_claim_thread(spark, tmp_path):
+    """A job posted to a process that also works its queue is claimed
+    at once, not at the claim threads' next poll."""
+    core = Core(
+        spark,
+        jobstore_path=str(tmp_path / "jobs.db"),
+        distributed=True,
+        claim_poll_interval=5.0,
+    )
+    core.add_result_backend("default", str(tmp_path / "results"))
+    core.register_task(
+        Task(name="one", stmt="SELECT 1 AS x", raw_stmt="", queue="default")
+    )
+    core.start()
+    try:
+        time.sleep(0.5)  # every claim thread has found nothing and sleeps
+        t0 = time.monotonic()
+        core.new_job("one", JobReq(job_id="woken1"))
+        st = _wait(core, "woken1", timeout=30)
+        assert st["state"] == jobstore.SUCCESS
+        assert time.monotonic() - t0 < 3.0
+    finally:
+        core.stop()
+
+
 def test_distributed_restart_requeues_backlog(tmp_path):
     """A distributed primary restart treats the store as a durable
     broker: PENDING survives, in-flight rows return to the backlog

@@ -14,7 +14,7 @@ import pytest
 
 from dungbeetle_spark.client import Client, ClientError
 from dungbeetle_spark.core import Core
-from dungbeetle_spark.http_api import Server
+from dungbeetle_spark.http_api import Server, _jsonable
 
 TASKS_SQL = """\
 -- name: get_profit_summary
@@ -132,6 +132,24 @@ def test_result_rows_over_http(client):
     assert "-" in row["entry_date"]  # ISO date text
     with pytest.raises(ClientError, match="unknown job"):
         client.get_job_result("never_posted")
+
+
+def test_result_fetch_reads_small_result_on_driver(server, client):
+    """A small result is one driver-written file, which the route reads
+    with pyarrow: the reply is the Spark read's, value for value."""
+    core = server.httpd.RequestHandlerClass.core
+    resp = client.post_job("get_profit_entries", job_id="http_fast1", args=["7"])
+    assert _poll(client, resp["job_id"])["state"] == "SUCCESS"
+    assert core.result_backends.get("default").head("http_fast1", 3) is not None
+    df = core.read_result("http_fast1").limit(3)
+    rows = [
+        {k: _jsonable(v) for k, v in r.asDict(recursive=True).items()}
+        for r in df.collect()
+    ]
+    out = client.get_job_result("http_fast1", limit=3)
+    assert json.dumps(out) == json.dumps(
+        {"job_id": "http_fast1", "columns": df.columns, "rows": rows}
+    )
 
 
 def test_compact_over_http(client):
