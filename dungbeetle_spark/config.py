@@ -11,8 +11,10 @@ differences in the schema itself:
 - ``[results.*]`` backends are parquet warehouse directories (
   ``results_table`` template kept, sqldb.go:77-81).
 - ``[job_queue]`` (Redis broker/state in the reference) disappears:
-  queueing is in-process around one SparkSession — the distribution
-  story is Spark's own cluster, not N job-server workers.
+  the job store (``job_store``, in-memory SQLite by default) is the
+  broker every queue claims its jobs from, in one process as across
+  ``--worker-only`` sidecars sharing it; query parallelism is Spark's
+  own cluster.
 
 Durations like ``"60s"`` are accepted wherever the reference uses
 them (app.default_job_ttl, config.toml.sample:3).
@@ -74,10 +76,10 @@ class Config:
     default_queue: str = "default"
     worker_concurrency: int = 10  # cmd/init.go:44
     worker_only: bool = False
-    # Cross-process job distribution: the SQLite job_store doubles as
-    # the broker; every process (server or --worker-only) claims jobs
-    # from it atomically. Implied by worker_only; a server that feeds
-    # worker-only sidecars must set it too.
+    # Cross-process job distribution: every process (server or
+    # --worker-only) sharing the job_store claims jobs from it, with
+    # heartbeat leases and requeue-on-restart. Implied by worker_only;
+    # a server that feeds worker-only sidecars must set it too.
     distributed: bool = False
     default_job_ttl: float = 60.0  # app.default_job_ttl
     result_reaper_interval: float = 0.0  # app.result_reaper_interval; 0 = off

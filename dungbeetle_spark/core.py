@@ -8,10 +8,21 @@ The Spark-idiomatic rebuild of the reference's job pipeline
   view namespace over one shared SparkContext, the analog of the
   reference's named DB pools, dbpool.go:13-14),
 - named parquet result backends,
-- named queues, each a bounded worker pool — the reference's per-queue
-  worker concurrency is the whole point of the system (traffic
-  control; README "Usecase", cmd/init.go:44). Each queue maps onto a
-  Spark FAIR scheduler pool so concurrent jobs share the cluster.
+- named queues, each a bounded pool of claim threads — the reference's
+  per-queue worker concurrency is the whole point of the system
+  (traffic control; README "Usecase", cmd/init.go:44). Each queue maps
+  onto a Spark FAIR scheduler pool so concurrent jobs share the cluster.
+
+There is one dispatcher, as in the reference, where every job goes
+through the tasqueue broker even on one host (cmd/init.go:200-229): a
+post INSERTs a PENDING row into the job store and wakes a local claim
+thread; claim threads take the oldest runnable row (past its ETA,
+unowned) in one store transaction. The job store is the backlog in
+every mode — the private in-memory SQLite store of a single process as
+much as a file or served database shared by a worker fleet — so an ETA
+fires within one ``claim_poll_interval`` of its time, a RETRY returns
+the row to the backlog, and ``stop`` finishes running jobs but leaves
+queued ones PENDING.
 
 Execution of one job (the analog of execJob + writeResults,
 core.go:449-572): the worker thread pins the Spark job group to the
@@ -27,7 +38,6 @@ from __future__ import annotations
 
 import logging
 import os
-import queue as _queue
 import socket
 import threading
 import time
@@ -86,7 +96,7 @@ class Core:
         result_reaper_interval: float = 0.0,  # seconds; 0 = off (reference parity)
         jobstore_path: str | None = None,  # SQLite file; None = in-memory SQLite
         jobstore_recover_inflight: bool = True,  # False for worker sidecars
-        distributed: bool = False,  # workers claim from the shared store
+        distributed: bool = False,  # shared store: leases, heartbeat, requeue
         claim_queues: list[str] | None = None,  # None = claim every queue
         claim_poll_interval: float = 0.2,  # broker poll period (tasqueue analog)
         claim_lease: float = 120.0,  # reclaim jobs from dead workers; 0 = off
@@ -132,9 +142,8 @@ class Core:
         self.worker_concurrency = worker_concurrency
         self.default_job_ttl = default_job_ttl
         self.result_reaper_interval = result_reaper_interval
-        self._queues: dict[str, _WorkQueue] = {}
+        self._queues: dict[str, _ClaimPool] = {}
         self._sessions: dict[str, SparkSession] = {}
-        self._timers: dict[str, threading.Timer] = {}
         self._lock = threading.RLock()
         self._started = False
         self._reaper: threading.Thread | None = None
@@ -236,10 +245,10 @@ class Core:
             self._started = True
 
     def stop(self) -> None:
+        """Stop claiming: running jobs finish, queued ones stay PENDING
+        in the store (as in distributed mode and the reference's
+        Redis)."""
         with self._lock:
-            for t in self._timers.values():
-                t.cancel()
-            self._timers.clear()
             queues = list(self._queues.values())
             for q in queues:
                 q.stop()
@@ -266,8 +275,8 @@ class Core:
         # connection open for those daemon threads instead of dropping
         # their writes.
         # list-comprehension, not a generator: all() on a generator
-        # short-circuits at the first undrained queue and would skip
-        # joining (and draining) every pool after it
+        # short-circuits at the first unfinished pool and would skip
+        # joining every pool after it
         drained = all([q.join(timeout=30) for q in queues])
         if drained:
             self.store.close()
@@ -278,10 +287,8 @@ class Core:
         ``ttl`` (core.go:354-357, sqldb.go:89 — parameter unused) into
         real warehouse hygiene: at 100 TB, per-job ephemeral tables
         that nobody deletes *are* the storage bill."""
-        import time as _time
-
         reaped = []
-        for rec in self.store.expired(now if now is not None else _time.time()):
+        for rec in self.store.expired(now if now is not None else time.time()):
             if rec.result_backend:
                 try:
                     self.result_backends.get(rec.result_backend).delete(rec.job_id)
@@ -349,32 +356,30 @@ class Core:
             except Exception:  # noqa: BLE001 — liveness must not die
                 pass
 
-    def _ensure_queue(self, name: str, concurrency: int):
-        """One worker pool per queue: an in-proc FIFO pool normally, a
-        store-claiming pool in distributed mode (where the backlog
-        lives in the shared SQLite broker, not process memory). A
-        distributed process only spins claim workers for queues it
-        subscribes to (``claim_queues``), like reference workers
-        subscribing to specific queues — but tracks every queue name
-        for metrics."""
+    def _ensure_queue(self, name: str, concurrency: int) -> _ClaimPool:
+        """One claim pool per queue over ``self.store``, which holds the
+        backlog in every mode. A process only spins claim threads for
+        queues it subscribes to (``claim_queues``), like reference
+        workers subscribing to specific queues — but tracks every queue
+        name for metrics.
+
+        The lease is the distributed one or none: only a distributed
+        process runs the heartbeat that keeps its own leases fresh, so
+        a lease without it would re-claim (and run twice) every job
+        that outlives it."""
         with self._lock:
             q = self._queues.get(name)
             if q is None:
-                if self.distributed:
-                    subscribed = (
-                        self.claim_queues is None or name in self.claim_queues
-                    )
-                    q = _ClaimPool(
-                        name,
-                        max(concurrency, 1) if subscribed else 0,
-                        self.store,
-                        self._run_job,
-                        self.claim_poll_interval,
-                        self.worker_id,
-                        self.claim_lease,
-                    )
-                else:
-                    q = _WorkQueue(name, max(concurrency, 1), self._run_job)
+                subscribed = self.claim_queues is None or name in self.claim_queues
+                q = _ClaimPool(
+                    name,
+                    max(concurrency, 1) if subscribed else 0,
+                    self.store,
+                    self._run_job,
+                    self.claim_poll_interval,
+                    self.worker_id,
+                    self.claim_lease if self.distributed else 0.0,
+                )
                 self._queues[name] = q
             return q
 
@@ -401,21 +406,12 @@ class Core:
             max_retries=req.retries,
         )
         self.store.create(rec)  # atomic single-flight check (jobstore)
-        q = self._ensure_queue(queue_name, task.conc or self.worker_concurrency)
-        if eta_ts is None or eta_ts <= time.time():
-            # Distributed: the INSERT above IS the enqueue; submitting
-            # only wakes a local claim thread, so the job does not wait
-            # for the next poll (other processes keep polling).
-            self._submit(q, job_id)
-        elif not self.distributed:
-            delay = eta_ts - time.time()
-            timer = threading.Timer(delay, lambda: self._submit(q, job_id))
-            timer.daemon = True
-            with self._lock:
-                self._timers[job_id] = timer
-            timer.start()
-        # (a distributed job with a future ETA needs no timer: the claim
-        # itself filters on ETA)
+        # The INSERT above IS the enqueue; submitting only wakes a local
+        # claim thread, so the job does not wait for the next poll. A
+        # future ETA needs no timer: the claim itself filters on ETA.
+        self._ensure_queue(
+            queue_name, task.conc or self.worker_concurrency
+        ).submit(job_id)
         return JobResp(
             job_id=job_id,
             task=task_name,
@@ -435,11 +431,6 @@ class Core:
         # create_group stamps group_id onto each member record.
         self.store.create_group(group_id, [r.job_id for r in resps])
         return group_id, resps
-
-    def _submit(self, q: "_WorkQueue", job_id: str) -> None:
-        with self._lock:
-            self._timers.pop(job_id, None)
-        q.submit(job_id)
 
     # -- status -------------------------------------------------------
     def job_status(self, job_id: str) -> dict:
@@ -473,10 +464,6 @@ class Core:
         if rec.state in (jobstore.SUCCESS, jobstore.FAILURE) and not purge:
             raise ValueError(f"job {job_id} is already complete ({rec.state})")
         self.store.mark_cancelled(job_id)
-        with self._lock:
-            timer = self._timers.pop(job_id, None)
-        if timer:
-            timer.cancel()
         # Interrupt any running stages of this job's group.
         self.spark.sparkContext.cancelJobGroup(job_id)
         self.store.delete(job_id)
@@ -495,10 +482,12 @@ class Core:
 
     # -- execution (execJob + writeResults, core.go:449-572) ----------
     def _run_job(self, queue_name: str, job_id: str) -> None:
+        """Execute one job a claim thread has claimed: the claim already
+        stamped it STARTED and owned by this worker."""
         try:
             rec = self.store.get(job_id)
         except KeyError:
-            return  # cancelled while pending (core.go:451-454)
+            return  # cancelled since the claim (core.go:451-454)
         if rec.cancelled:
             return
         task = self.tasks.get(rec.task)
@@ -512,14 +501,6 @@ class Core:
                 error=f"task {rec.task} not registered in worker {self.worker_id}",
             )
             return
-        if not (rec.state == jobstore.STARTED and rec.owner == self.worker_id):
-            # In-proc pools transition PENDING→STARTED here; distributed
-            # claims already stamped STARTED+owner+heartbeat in the claim
-            # transaction — skip the redundant writer-lock RMW.
-            try:
-                self.store.set_state(job_id, jobstore.STARTED, owner=self.worker_id)
-            except KeyError:
-                return  # purged by a cross-process cancel between get and here
         with self._lock:
             self._running.add(job_id)
         try:
@@ -542,10 +523,10 @@ class Core:
             except KeyError:
                 return  # cancelled mid-flight; job purged
             if attempts <= rec.max_retries and not fresh.cancelled:
-                # RETRY returns the job to the backlog. Distributed:
-                # clear the owner stamp so ANY subscribed process may
-                # re-deliver it (broker semantics); in-proc: resubmit
-                # to this queue's pool like the reference's tasqueue.
+                # RETRY returns the job to the backlog: with the owner
+                # stamp cleared the row is claimable again, by any
+                # subscribed claim thread of any process (broker
+                # semantics).
                 self.store.set_state(
                     job_id,
                     jobstore.RETRY,
@@ -553,11 +534,6 @@ class Core:
                     attempts=attempts,
                     owner="",
                 )
-                if not self.distributed:
-                    q = self._ensure_queue(
-                        queue_name, task.conc or self.worker_concurrency
-                    )
-                    q.submit(job_id)
             else:
                 self.store.set_state(
                     job_id,
@@ -691,16 +667,18 @@ class Core:
 
 
 class _ClaimPool:
-    """Distributed-mode worker pool: N threads polling the shared
-    job store (the broker) for jobs on one queue.
+    """A queue's worker pool: N threads claiming its jobs from the job
+    store (the broker), at most N running at once (core.go:437-440
+    TaskOpts{Concurrency, Queue}).
 
     The analog of reference workers subscribed to a tasqueue queue
-    (core.go:403-447): any process pointed at the same store — the
-    SQLite file itself, that file served by netdbapi, or a Postgres —
-    runs its own pool, and the atomic ``JobStore.claim`` guarantees each
-    job is delivered to exactly one of them. ``concurrency=0`` means
-    this process tracks the queue (metrics, enqueue) but does not
-    execute its jobs — a pure producer.
+    (core.go:403-447). Every ``Core`` queue is one of these, over the
+    private in-memory store as over a shared one; any process pointed
+    at the same store — the SQLite file itself, that file served by
+    netdbapi, or a Postgres — runs its own pool, and the atomic
+    ``JobStore.claim`` guarantees each job is delivered to exactly one
+    of them. ``concurrency=0`` means this process tracks the queue
+    (metrics, enqueue) but does not execute its jobs — a pure producer.
     """
 
     def __init__(
@@ -781,62 +759,3 @@ class _ClaimPool:
             t.join(timeout=max(0.0, deadline - time.monotonic()))
         return not any(t.is_alive() for t in self._threads)
 
-
-class _WorkQueue:
-    """A named queue with a bounded worker-thread pool.
-
-    The analog of a tasqueue queue + its worker goroutines: jobs are
-    FIFO per queue, at most ``concurrency`` execute at once
-    (core.go:437-440 TaskOpts{Concurrency, Queue}).
-    """
-
-    def __init__(
-        self, name: str, concurrency: int, run: Callable[[str, str], None]
-    ) -> None:
-        self.name = name
-        self.concurrency = concurrency
-        self._run = run
-        self._q: _queue.Queue[str | None] = _queue.Queue()
-        self._threads: list[threading.Thread] = []
-        self._stopping = False
-        for i in range(concurrency):
-            t = threading.Thread(
-                target=self._worker, name=f"dbq-{name}-{i}", daemon=True
-            )
-            t.start()
-            self._threads.append(t)
-
-    def submit(self, job_id: str) -> None:
-        self._q.put(job_id)
-
-    def backlog(self) -> int:
-        return self._q.qsize()
-
-    def _worker(self) -> None:
-        while True:
-            job_id = self._q.get()
-            if job_id is None:
-                return
-            try:
-                self._run(self.name, job_id)
-            except Exception:  # noqa: BLE001 — same rationale as
-                # _ClaimPool: only store-layer errors escape _run_job,
-                # and they must not kill the pool thread
-                _log.exception("queue worker: job %s crashed the run wrapper",
-                               job_id)
-            finally:
-                self._q.task_done()
-
-    def stop(self) -> None:
-        self._stopping = True
-        for _ in self._threads:
-            self._q.put(None)
-
-    def join(self, timeout: float) -> bool:
-        """Wait for the worker threads to drain; True if all exited.
-        Sentinels sit behind already-queued jobs, so this drains the
-        queue's backlog too."""
-        deadline = time.monotonic() + timeout
-        for t in self._threads:
-            t.join(timeout=max(0.0, deadline - time.monotonic()))
-        return not any(t.is_alive() for t in self._threads)

@@ -36,9 +36,11 @@ tests/test_broker_contract.py.
 Restart semantics (``recover`` modes, applied to rows the previous
 process left non-terminal):
 
-- ``"fail"`` — single-process engine: the in-proc work queue died with
-  the process, so non-terminal jobs can never finish; mark FAILURE
-  (honest failure beats a forever-PENDING ghost).
+- ``"fail"`` — single-process engine: the claim threads that owned
+  these rows died with the process (or ``stop`` left its backlog
+  PENDING), and without the distributed heartbeat lease the store is
+  not a durable backlog; mark FAILURE (an honest answer beats a ghost
+  that runs at some later restart, or never).
 - ``"requeue"`` — distributed engine: the shared backend IS the broker
   and PENDING rows are durable backlog; keep them, and return
   STARTED/RETRY rows to the backlog (owner cleared) for re-delivery —

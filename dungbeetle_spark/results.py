@@ -18,11 +18,13 @@ anything runs:
   (Spark's own bound for "small enough to collect to the driver"; -1
   turns the path off), the plan holds no row-multiplying node whose
   estimate cannot be trusted (``Generate``, Python map/flat-map,
-  Python UDTF), the task has no ``partition_by`` and the warehouse is
-  a local path, the result is collected with ``toArrow()`` and
-  written by ``pyarrow`` as one ``part-00000-…`` file carrying Spark's
-  row-schema metadata, so Spark, ``compact`` and the TTL reaper read
-  and delete it like any other table. A Spark write costs a fixed
+  Python UDTF) nor a call the estimate sizes at its type's default
+  width (``sequence``, ``repeat``, ``array_repeat``), the task has no
+  ``partition_by`` and the warehouse is a local path, the result is
+  collected with ``toArrow()`` and written by ``pyarrow`` as one
+  ``part-00000-…`` file carrying Spark's row-schema metadata, so
+  Spark, ``compact`` and the TTL reaper read and delete it like any
+  other table. A Spark write costs a fixed
   ~0.1 s of job set-up and commit protocol that dwarfs a 30-row
   result.
 - **Spark's parquet writer** for everything else::
@@ -110,10 +112,18 @@ _ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 _VERSION_METADATA = b"org.apache.spark.version"
 _LEGACY_CALENDAR = (b"org.apache.spark.legacyDateTime", b"org.apache.spark.legacyINT96")
 
-# Plan nodes that can emit more rows than their input while the
-# optimizer estimates their output from the input alone: a plan holding
-# one may be far larger than its size estimate says.
-_UNBOUNDED_NODES = re.compile(r"Generate|MapInPandas|MapInArrow|FlatMap\w*|\w*PythonUDTF")
+# What the optimizer's size estimate does not bound, in an analyzed
+# plan's tree string: nodes that can emit more rows than their input
+# while their output is estimated from the input alone (a Python UDTF
+# is a ``Generate``; a node name opens its line after the tree's
+# ``:- `` / ``+- `` prefix), and calls whose values the estimate sizes
+# at the type default of their result (``sequence(1, 10000000)`` is
+# estimated at 2 bytes).
+_UNBOUNDED = re.compile(
+    r"^[\s:+-]*(?:Generate|MapInPandas|MapInArrow|FlatMap\w*)\b"
+    r"|\b(?:sequence|repeat|array_repeat)\(",
+    re.MULTILINE,
+)
 
 
 def _is_local(path: str) -> bool:
@@ -142,26 +152,21 @@ def _internal(t):
 def _fits_driver(out: DataFrame) -> bool:
     """Whether ``out``'s optimized plan is estimated small enough to
     collect to the driver: within ``spark.sql.autoBroadcastJoinThreshold``
-    (-1 = never) and free of nodes whose estimate cannot be trusted.
-    Decided before anything runs; ``toArrow`` then reuses the plan."""
+    (-1 = never) and free of nodes and calls whose estimate cannot be
+    trusted. Decided before anything runs; ``toArrow`` then reuses the
+    plan."""
     jdf = out._jdf
     bound = jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
     if bound < 0:
         return False
-    plan = jdf.queryExecution().optimizedPlan()
-    if int(plan.stats().sizeInBytes()) > bound:
+    qe = jdf.queryExecution()
+    if int(qe.optimizedPlan().stats().sizeInBytes()) > bound:
         return False
-    # Walk node names rather than parse ``treeString()``: that prints
-    # every literal in full, and a constant-folded array can make it
-    # larger than the driver's heap.
-    nodes = [plan]
-    while nodes:
-        node = nodes.pop()
-        if _UNBOUNDED_NODES.fullmatch(node.nodeName()):
-            return False
-        children = node.children()
-        nodes.extend(children.apply(i) for i in range(children.size()))
-    return True
+    # The analyzed plan, not the optimized one: the optimizer folds
+    # ``sequence(...)`` into a literal, which the optimized tree string
+    # prints in full (larger than the driver's heap for a long array)
+    # and which names no call.
+    return _UNBOUNDED.search(qe.analyzed().treeString()) is None
 
 
 class ParquetResultBackend:

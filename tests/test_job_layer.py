@@ -166,6 +166,53 @@ def test_failure_and_retries(core):
     assert "this_table_does_not_exist" in st["error"] or "TABLE_OR_VIEW" in st["error"]
 
 
+def test_row_written_to_the_store_runs(core):
+    """The store is the backlog: a row inserted without ``new_job``
+    (no wake-up) is claimed by the queue's pool at its next poll."""
+    core.store.create(jobstore.JobRecord(
+        job_id="direct_row", task="get_profit_entries", queue="default",
+        args=["1"],
+    ))
+    st = _wait(core, "direct_row", (jobstore.SUCCESS, jobstore.FAILURE), timeout=30)
+    assert st["state"] == jobstore.SUCCESS, st["error"]
+    assert st["count"] > 0
+
+
+def test_single_process_job_outliving_claim_lease_runs_once(
+    spark, tmp_path_factory
+):
+    """A single-process engine runs no heartbeat, so its claims take no
+    lease: a job running past ``claim_lease`` is not re-claimed by an
+    idle thread of its own pool and run a second time."""
+    c = Core(spark, worker_concurrency=2, claim_lease=0.5)
+    c.add_result_backend("default", str(tmp_path_factory.mktemp("lease_res")))
+    c.register_task(Task(
+        name="sleepy", raw_stmt="", queue="default",
+        stmt="SELECT reflect('java.lang.Thread', 'sleep', 2500L) AS slept",
+    ))
+    backend = c.result_backends.get("default")
+    writes: list[str] = []
+    orig_write = backend.write
+
+    def counting_write(job_id, *a, **kw):
+        writes.append(job_id)
+        return orig_write(job_id, *a, **kw)
+
+    backend.write = counting_write
+    c.start()
+    try:
+        c.new_job("sleepy", JobReq(job_id="outlives_lease"))
+        st = _wait(c, "outlives_lease", (jobstore.SUCCESS, jobstore.FAILURE))
+        assert st["state"] == jobstore.SUCCESS, st["error"]
+        # a re-claim can only happen while the row is STARTED; give a
+        # run claimed just before SUCCESS the time to reach its write
+        time.sleep(0.5)
+        assert c.store.get("outlives_lease").attempts == 0
+        assert writes == ["outlives_lease"]
+    finally:
+        c.stop()
+
+
 def test_eta_delays_execution(core):
     eta = time.strftime("%Y-%m-%d %H:%M:%S", time.localtime(time.time() + 2))
     resp = core.new_job("get_profit_entries", JobReq(args=["4"], eta=eta))
@@ -406,10 +453,18 @@ def test_jobstore_survives_restart(spark, sf_smoke, tmp_path):
     gid, _resps = c1.new_job_group("durable_grp", [("n_orders", JobReq())])
     for j in c1.store.group_jobs(gid):
         _wait(c1, j, (jobstore.SUCCESS,))
-    # simulate a crash mid-flight for a second job: poke a fake active
-    # record straight into the store (persisted as PENDING)
-    c1.store.create(jobstore.JobRecord(job_id="ghost", task="n_orders", queue="default"))
     c1.stop()  # driver "dies" (close flushes nothing extra; write-through)
+    # simulate rows a crash left active, written once c1's claim threads
+    # are gone (they would run a PENDING row): one never claimed, one
+    # STARTED by a worker that died mid-job
+    s = jobstore.JobStore(persist_path=db, recover="attach")
+    s.create(jobstore.JobRecord(job_id="ghost", task="n_orders", queue="default"))
+    s.create(jobstore.JobRecord(
+        job_id="ghost_started", task="n_orders", queue="default",
+        state=jobstore.STARTED, owner="deadhost:1:000000",
+        heartbeat_at=time.time() - 3600,
+    ))
+    s.close()
 
     c2 = Core(spark, jobstore_path=db)
     c2.add_source("testdata", sf_smoke)
@@ -418,9 +473,10 @@ def test_jobstore_survives_restart(spark, sf_smoke, tmp_path):
     assert st2["state"] == jobstore.SUCCESS
     assert st2["count"] == st["count"] > 0
     assert c2.read_result("durable1").count() == st["count"]  # path survives
-    ghost = c2.job_status("ghost")
-    assert ghost["state"] == jobstore.FAILURE
-    assert "restart" in ghost["error"]
+    for job_id in ("ghost", "ghost_started"):
+        ghost = c2.job_status(job_id)
+        assert ghost["state"] == jobstore.FAILURE
+        assert "restart" in ghost["error"]
     # groups recover too: membership and aggregate state
     g = c2.group_status("durable_grp")
     assert g["state"] == jobstore.SUCCESS

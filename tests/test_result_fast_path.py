@@ -87,6 +87,10 @@ def core(spark, tmp_path_factory):
         _task("rich_by_b", rich, result_backends=["default"], partition_by=["b"]),
         _task("exploded", "SELECT explode(sequence(1, 1000)) AS v",
               result_backends=["default"]),
+        _task("sequence", "SELECT sequence(1, 1000) AS a", result_backends=["default"]),
+        _task("repeat", "SELECT repeat('x', 1000) AS s", result_backends=["default"]),
+        _task("array_repeat", "SELECT array_repeat('x', 1000) AS a",
+              result_backends=["default"]),
         _task("to_jdbc", "SELECT CAST(id AS BIGINT) AS n, 'x' AS s FROM range(3)",
               result_backends=["derby"]),
         _task("echo", "SELECT CAST(:p1 AS BIGINT) AS v", nargs=1,
@@ -207,6 +211,16 @@ def test_generate_plan_takes_spark_writer(core, arrow_writes):
     st = _run(core, "exploded", "fp_exploded")
     assert arrow_writes == []
     assert st["count"] == 1000
+
+
+@pytest.mark.parametrize("task", ["sequence", "repeat", "array_repeat"])
+def test_widening_call_takes_spark_writer(core, arrow_writes, task):
+    """The estimate sizes these calls' values at their type's default
+    width, whatever length they build (``sequence(1, 10000000)`` reads
+    as 2 bytes), so a plan holding one may be far larger than it says."""
+    st = _run(core, task, f"fp_{task}")
+    assert arrow_writes == []
+    assert st["count"] == 1
 
 
 def test_fallback_reads_still_answer(core, spark, arrow_writes):
