@@ -360,7 +360,7 @@ def _materialize_tables(spark, sf_dir: str, names: set[str]) -> None:
     # Non-pinned mode returns the session, not a decorator: unpinned
     # threads share JVM thread-locals, so concurrent builds could bleed
     # job groups — build sequentially then (same guard as
-    # pipeline._materialize_concurrently).
+    # planmode.materialize_concurrently).
     if not callable(deco) or deco is spark:
         for t in ordered:
             build_one(t)

@@ -548,12 +548,14 @@ class Core:
     def _execute(
         self, rec: JobRecord, task: Task, queue_name: str
     ) -> tuple[int, str, str]:
-        sess, df = self.build_dataframe(rec.task, rec.args, db=rec.db)
-        sc = sess.sparkContext
-        # Queue → FAIR scheduler pool; job → cancellable job group.
+        sc = self.spark.sparkContext
+        # Queue → FAIR scheduler pool; job → cancellable job group. Set
+        # before the build, so the Spark jobs a builder runs (its
+        # barriers, driver pulls) are cancelled with the job too.
         sc.setLocalProperty("spark.scheduler.pool", queue_name)
         sc.setJobGroup(rec.job_id, f"task={rec.task}", interruptOnCancel=True)
         try:
+            _sess, df = self.build_dataframe(rec.task, rec.args, db=rec.db)
             backend = self.result_backends.get_random(
                 task.result_backends or None
             )  # random tagged backend (core.go:514-515)

@@ -41,6 +41,7 @@ from urllib.parse import parse_qs, urlparse
 from dungbeetle_spark import __version__
 from dungbeetle_spark.core import Core, JobReq
 from dungbeetle_spark.jobstore import SingleFlightError
+from dungbeetle_spark.planmode import plan_only
 
 # Job-ID validation (cmd/http.go:14); applied only to non-empty IDs
 # per quirk Q3.
@@ -181,15 +182,12 @@ class _Handler(BaseHTTPRequestHandler):
             # Engine extension (no reference analog — it cannot see its
             # source DBs' plans): the task's Catalyst physical plan,
             # with placeholder args bound from ?args=a,b,c.
-            from dungbeetle_spark.operators.pipeline import plan_only
             from dungbeetle_spark.plans.inspect import formatted_plan
 
             args = [a for a in q.get("args", "").split(",") if a != ""]
-            # ADVICE r14: plan inspection must not run cluster work —
-            # under plan_only() the fate-family builders construct
-            # fully lazy frames (no eager reference materialization),
-            # so this endpoint prints a plan without launching
-            # corpus-scale jobs.
+            # Plan inspection must not run cluster work: under
+            # plan_only() every build-time barrier is lazy, so only
+            # the job-running categories planmode names submit jobs.
             with plan_only():
                 _sess, df = core.build_dataframe(
                     parts[1], args, db=q.get("db", "")

@@ -16,6 +16,7 @@ from pyspark.sql.window import Window as W
 
 from dungbeetle_spark.functions.texts import md5_hash60_sql
 from dungbeetle_spark.operators.ranks import global_ntile
+from dungbeetle_spark.planmode import maybe_local_checkpoint
 from dungbeetle_spark.queries import _t, query
 
 
@@ -605,8 +606,8 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iteration.
     # lazy: one RDD shared by every iteration still evaluates once,
     # without a separate up-front job per checkpoint
-    edges_d = (
-        edges.join(deg, "src").repartition("src").localCheckpoint(eager=False)
+    edges_d = maybe_local_checkpoint(
+        edges.join(deg, "src").repartition("src"), eager=False
     )
     n_iters = 2
     # Iteration 1: every rank is the uniform 1,000,000-micro prior, so
@@ -617,7 +618,7 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("dst").alias("node"))
         .agg((F.lit(150_000) + F.sum("w")).cast("long").alias("r"))
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     for it in range(1, n_iters):
         ranks = (
@@ -631,7 +632,7 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             # lineage the next round would re-execute; the last
             # round's output flows straight to the consumer, saving
             # one materialization barrier.
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = maybe_local_checkpoint(ranks, eager=False)
     return ranks.select(
         F.when(F.col("node") % 2 == 0, F.lit("customer"))
         .otherwise(F.lit("supplier"))
@@ -981,7 +982,7 @@ def triangle_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # whole fact-scan + posting-list self-join per consumer — 9
         # fact scans instead of 1. Lazy: the one shared RDD still
         # evaluates once, inside the consuming action.
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
     tri = (
@@ -1149,7 +1150,7 @@ def frequent_item_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # four consumers (total, part supports, both self-join sides):
         # materialize once or the fact scan + distinct re-execute per
         # use; lazy — one shared RDD, evaluated inside the action
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     total = op.agg(F.countDistinct("o").alias("total"))
     part_supp = op.groupBy("p").agg(F.count(F.lit(1)).alias("sup"))
@@ -1326,7 +1327,7 @@ def pareto_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         # in different pids per branch -- silently wrong offsets.
         # Lazy: one shared RDD + partitioner still guarantees a
         # single sampling/evaluation, without a separate eager job.
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     wl = W.partitionBy("pid").orderBy(F.desc("r"), F.asc("o_custkey")).rowsBetween(
         W.unboundedPreceding, 0
@@ -1538,7 +1539,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them concurrently from the DAG, no thread orchestration needed.
     # Each pass ranges only (user_id, metric) pairs; scores join back
     # user-keyed.
-    base = rfm.localCheckpoint(eager=False)
+    base = maybe_local_checkpoint(rfm, eager=False)
 
     def _score(out: str, metric: str) -> DataFrame:
         return global_ntile(

@@ -34,6 +34,7 @@ from pyspark.sql.window import Window as W
 from dungbeetle_spark.functions.numeric import dsum
 from dungbeetle_spark.functions.texts import md5_hash60, md5_hash60_sql, word_count
 from dungbeetle_spark.operators.ranks import global_ntile
+from dungbeetle_spark.planmode import maybe_local_checkpoint
 from dungbeetle_spark.queries import _t, query
 from dungbeetle_spark.sources.catalog import fan_out
 
@@ -742,7 +743,7 @@ def curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         # shuffles) a second time. Lazy: materializes inside the first
         # job that touches it, then both the sampler and the shuffle
         # read the stored blocks.
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     n_parts = max(spark.sparkContext.defaultParallelism, 8)
     return global_ntile(
@@ -1558,8 +1559,8 @@ def shard_interleave_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         okey.alias("okey"),
     ).withColumn("shard_id", F.expr(f"okey DIV {_ILV_SHIFT}"))
     w = W.partitionBy("shard_id").orderBy("okey", "doc_id")
-    seq = seq.withColumn("prev_src", F.lag("source").over(w)).localCheckpoint(
-        eager=False
+    seq = maybe_local_checkpoint(
+        seq.withColumn("prev_src", F.lag("source").over(w)), eager=False
     )  # three consumers: adjacency rollup, run segmentation, source counts
     runs = seq.withColumn(
         "run_id",

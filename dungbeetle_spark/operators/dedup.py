@@ -40,6 +40,7 @@ from dungbeetle_spark.functions.texts import (
     md5_hash60_sql,
     norm_text,
 )
+from dungbeetle_spark.planmode import maybe_local_checkpoint
 from dungbeetle_spark.queries import _t, query
 from dungbeetle_spark.sources.catalog import fan_out
 
@@ -252,7 +253,7 @@ def _capped_band_pairs(
     window over (band, h), the same key the join shuffles on, so
     Catalyst reuses the exchange for the left side.
     """
-    long = long.localCheckpoint(eager=False)  # feeds 3 consumers below
+    long = maybe_local_checkpoint(long, eager=False)  # feeds 3 consumers below
     wb = W.partitionBy("band", "h")
     sized = long.withColumn("bn", F.count(F.lit(1)).over(wb)).withColumn(
         "leader", F.min("doc_id").over(wb)
@@ -460,7 +461,7 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shingled(d)
         .select("doc_id", F.explode("shingles").alias("s"))
         .withColumn("hs", md5_hash60(F.col("s")))
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     mh = sh.groupBy("doc_id").agg(
         *[
@@ -473,7 +474,7 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sized/cand CTEs); the audit frame is dropped here, the pair set
     # itself is what this query calibrates.
     cand, _ = _capped_band_pairs(_band_rows(mh))
-    cand = cand.localCheckpoint(eager=False)
+    cand = maybe_local_checkpoint(cand, eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
@@ -657,7 +658,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(F.array(*[F.col(f"h{j}") for j in range(_MH_TABLES)])).alias(
             "band", "h"
         ),
-    ).localCheckpoint(eager=False)
+    ).transform(maybe_local_checkpoint, eager=False)
     batch = bands.filter(F.col("doc_id") % _INC_MOD == 0).select(
         F.col("doc_id").alias("qdoc"), "band", "h"
     )
@@ -670,7 +671,8 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands.filter(F.col("doc_id") % _INC_MOD != 0)
         .withColumn("bn", F.count(F.lit(1)).over(wb))
         .withColumn("leader", F.min("doc_id").over(wb))
-        .localCheckpoint(eager=False)  # probe filter + audit consumers
+        # probe filter + audit consumers
+        .transform(maybe_local_checkpoint, eager=False)
     )
     corpus = sized.filter(
         (F.col("bn") <= _LSH_BUCKET_CAP)
@@ -944,7 +946,7 @@ def _embedding_pairs_lsh(
     signed = _signatures(e.select("vec_id", "embedding"), _DIM)
     buckets = signed.select(
         "vec_id", "embedding", F.posexplode("sigs").alias("band", "bucket")
-    ).localCheckpoint(eager=False)  # feeds left/right sides + audit
+    ).transform(maybe_local_checkpoint, eager=False)  # feeds left/right sides + audit
     wb = W.partitionBy("band", "bucket")
     sized = buckets.withColumn("bn", F.count(F.lit(1)).over(wb)).withColumn(
         "leader", F.min("vec_id").over(wb)
@@ -2407,7 +2409,7 @@ def _planner_pair_counts(d: DataFrame, cap: int | None = None) -> DataFrame:
             F.min(md5_hash60(F.concat(F.lit(f"{j}|"), F.col("s")))).alias(f"h{j}")
             for j in range(_PLAN_H)
         ]
-    ).localCheckpoint(eager=False)  # one signature pass, 3 consumers
+    ).transform(maybe_local_checkpoint, eager=False)  # one signature pass, 3 consumers
     long = mh.select(
         "doc_id",
         F.posexplode(
@@ -2420,7 +2422,7 @@ def _planner_pair_counts(d: DataFrame, cap: int | None = None) -> DataFrame:
     else:
         # the bucket stats come from one window over (j, h), the same
         # key the join shuffles on, so Catalyst reuses the exchange
-        long = long.localCheckpoint(eager=False)  # left + right + audit
+        long = maybe_local_checkpoint(long, eager=False)  # left + right + audit
         wb = W.partitionBy("j", "h")
         sized = long.withColumn("bn", F.count(F.lit(1)).over(wb)).withColumn(
             "leader", F.min("doc_id").over(wb)

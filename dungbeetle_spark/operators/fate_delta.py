@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dungbeetle_spark.planmode import materialize_concurrently, maybe_local_checkpoint
 from dungbeetle_spark.queries import _t, query
 
 _MAN_COLS = [
@@ -219,7 +220,6 @@ def delta_state_tables(
     DF counts, eval shingle sets, eval band rows. Materialized through
     the Part A layer once per process (warehouse._result_table's cache
     + staleness contract)."""
-    from dungbeetle_spark.operators.pipeline import _materialize_concurrently
     from dungbeetle_spark.operators.warehouse import _result_table
 
     # r14 opt (guide §2.6): the state tables are mutually independent
@@ -232,7 +232,7 @@ def delta_state_tables(
     # far cheaper than the spread it no longer duplicates, so the
     # stage's critical path shortens even though the build serializes
     # behind its input table.
-    g, s, es = _materialize_concurrently(
+    g, s, es = materialize_concurrently(
         spark,
         lambda: _result_table(
             spark, sf_dir, "fate_evgram_df_dupseeded", _evgram_df_frame,
@@ -346,8 +346,6 @@ def refreshed_eval_bands(
         stops_new = _stops_from_df(
             refreshed_shingle_df(prev_s, sd, ev), nd_new
         )
-        from dungbeetle_spark.planmode import maybe_local_checkpoint
-
         stops_new = maybe_local_checkpoint(
             stops_new, eager=False
         )  # feeds the flip diff + the recompute filter
@@ -361,9 +359,7 @@ def refreshed_eval_bands(
         .select("doc_id")
         .distinct()
     )
-    from dungbeetle_spark.planmode import maybe_local_checkpoint as _ckpt
-
-    rec_ids = _ckpt(
+    rec_ids = maybe_local_checkpoint(
         flip_affected.join(out_eval, "doc_id", "left_anti")
         .unionByName(in_eval)
         .distinct(),
@@ -402,9 +398,7 @@ def refreshed_reference_tables(
     # r14 opt (guide §2.6): the gram and stop refreshes are independent
     # of each other — overlap their job-layer builds; the band build
     # stays behind them because it chains from the shipped stop table.
-    from dungbeetle_spark.operators.pipeline import _materialize_concurrently
-
-    g, s = _materialize_concurrently(
+    g, s = materialize_concurrently(
         spark,
         lambda: _result_table(
             spark, sf_dir, "fate_refreshed_eval_grams", _g_build,
@@ -528,8 +522,6 @@ def fate_reference_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # digest and the band refresh (checkpointed — without it the
     # band path re-derives the whole merge)
     _nd_prev, nd_new = _nd_frames(sd)
-    from dungbeetle_spark.planmode import maybe_local_checkpoint
-
     stops = maybe_local_checkpoint(
         _stops_from_df(refreshed_shingle_df(prev_s, sd, ev), nd_new),
         eager=False,
@@ -589,8 +581,6 @@ def _probe_frame(
         word_ngrams,
     )
     from dungbeetle_spark.sources.catalog import fan_out
-
-    from dungbeetle_spark.planmode import maybe_local_checkpoint
 
     pdocs = maybe_local_checkpoint(
         ev.join(probe_ids, "doc_id", "left_semi").select("doc_id", "text"),
@@ -657,23 +647,11 @@ def _apply_frames(
     # r14 opt (guide §2.6): the plan triage and the touched-doc flags
     # are independent — materialize both reference frames concurrently
     # (plan feeds the three action filters; tflags three disjoint ones).
-    # r15 (ADVICE r14): under plan_only() the frames stay lazy so plan
-    # inspection launches no Spark jobs.
-    from dungbeetle_spark.operators.pipeline import (
-        _is_plan_only,
-        _materialize_concurrently,
+    plan, tflags = materialize_concurrently(
+        ev.sparkSession,
+        lambda: maybe_local_checkpoint(plan_lazy),
+        lambda: maybe_local_checkpoint(tflags_lazy),
     )
-
-    if _is_plan_only():
-        # NO checkpoints in plan-only mode: even eager=False forces
-        # AQE stage materialization at RDD-creation time (planmode).
-        plan, tflags = plan_lazy, tflags_lazy
-    else:
-        plan, tflags = _materialize_concurrently(
-            ev.sparkSession,
-            lambda: plan_lazy.localCheckpoint(),
-            lambda: tflags_lazy.localCheckpoint(),
-        )
 
     # keep_prev: the shipped manifest rows, verbatim (safety pinned by
     # test_plan_keep_prev_rows_are_provably_stable since r13)
@@ -737,9 +715,7 @@ def _apply_frames(
             ).alias("key"),
         )
     )
-    from dungbeetle_spark.planmode import maybe_local_checkpoint as _ckpt
-
-    election = _ckpt(
+    election = maybe_local_checkpoint(
         re_members.unionByName(t_elect), eager=False
     )  # feeds winners + the member join
     winners = election.groupBy("key").agg(F.min("doc_id").alias("keeper"))

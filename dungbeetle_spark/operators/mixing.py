@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from dungbeetle_spark.functions.texts import md5_hash60, md5_hash60_sql, norm_text
+from dungbeetle_spark.planmode import maybe_local_checkpoint
 from dungbeetle_spark.queries import _t, query
 from dungbeetle_spark.sources.catalog import fan_out
 
@@ -477,7 +478,7 @@ def epoch_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("doc_id") % _EPOCHS).alias("epoch"), toks.alias("t"))
         .select("epoch", F.explode(word_ngrams("t", _GRAM_N)).alias("gram"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
 
     def _pos(j: int) -> "F.Column":
@@ -1514,7 +1515,7 @@ def kl_divergence_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     sw = (
         words.groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     wt = sw.groupBy("word").agg(F.sum("c").alias("cw"))
     s = sw.groupBy("source").agg(
@@ -1683,7 +1684,7 @@ def hll_register_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")["events"]
     regs = hll_partial(
         e.select(F.col("ts").cast("date").cast("string").alias("day"), "user_id")
-    ).localCheckpoint(eager=False)  # reused by the ALL merge in hll_fold
+    ).transform(maybe_local_checkpoint, eager=False)  # reused by hll_fold's ALL merge
     folded = hll_fold(regs)
     exact = (
         e.select(F.col("ts").cast("date").cast("string").alias("day"), "user_id")
@@ -1783,7 +1784,7 @@ def cross_source_ce_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sw = (
         words.groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)  # totals + both self-join sides
+        .transform(maybe_local_checkpoint, eager=False)  # totals + both self-join sides
     )
     s = sw.groupBy("source").agg(F.sum("c").alias("ns"))
     v = sw.select(F.countDistinct("word").alias("vv"))
@@ -1913,8 +1914,6 @@ def _fdc_shingle_hashes(seeded: DataFrame) -> DataFrame:
     >= 2 consumers: the stop-DF stats and an anti-join)."""
     from dungbeetle_spark.operators.dedup import _shingled
 
-    from dungbeetle_spark.planmode import maybe_local_checkpoint
-
     return maybe_local_checkpoint(
         _shingled(seeded)
         .select("doc_id", F.explode("shingles").alias("s"))
@@ -1926,8 +1925,6 @@ def _fdc_shingle_hashes(seeded: DataFrame) -> DataFrame:
 def _fdc_stop_set(sh: DataFrame, d: DataFrame) -> DataFrame:
     """hs values whose document frequency exceeds _FDC_STOP_PPM of the
     corpus — integer-exact, checkpointed (feeds anti-joins + audit)."""
-    from dungbeetle_spark.planmode import maybe_local_checkpoint
-
     ndocs = d.agg(F.count(F.lit(1)).alias("nd"))
     return maybe_local_checkpoint(
         sh.groupBy("hs")
@@ -2010,11 +2007,11 @@ def _fdc_reference(sess: SparkSession, sf_dir: str):
             )
         )
         .select(F.col("doc_id").alias("eval_doc"), "j", "h")
-        .localCheckpoint()
+        .transform(maybe_local_checkpoint)
     )
     audit = (
         stops.agg(F.count(F.lit(1)).cast("long").alias("stop_shingles"))
-        .localCheckpoint()
+        .transform(maybe_local_checkpoint)
     )
     return stops, ev_index, audit
 
@@ -2143,7 +2140,7 @@ def fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one signature aggregate over ALL docs (train + eval), checkpointed
     # because its band rows feed both probe sides
     mh = _fdc_minhash(sh.join(F.broadcast(stops), "hs", "left_anti"))
-    bands = _fdc_band_rows(mh.localCheckpoint(eager=False))
+    bands = _fdc_band_rows(maybe_local_checkpoint(mh, eager=False))
     ev = bands.filter(F.col("doc_id") % _EVAL_MOD == 0).select(
         F.col("doc_id").alias("eval_doc"), "j", "h"
     )

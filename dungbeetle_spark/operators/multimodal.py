@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
+from dungbeetle_spark.planmode import maybe_local_checkpoint
 from dungbeetle_spark.queries import _t, query
 
 MEDIA_SCHEMA = T.StructType(
@@ -786,7 +787,7 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs = d.mapInPandas(
         _phash_batch, schema="media_id long, bands array<long>"
-    ).localCheckpoint(eager=False)  # three consumers in _banded_canonical
+    ).transform(maybe_local_checkpoint, eager=False)  # 3 consumers in _banded_canonical
     return _banded_canonical(sigs, _PHASH_HAMMING_T)
 
 
@@ -960,5 +961,5 @@ def audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs = d.mapInPandas(
         _audio_fp_batch, schema="media_id long, bands array<long>"
-    ).localCheckpoint(eager=False)  # three consumers in _banded_canonical
+    ).transform(maybe_local_checkpoint, eager=False)  # 3 consumers in _banded_canonical
     return _banded_canonical(sigs, _AFP_HAMMING_T)

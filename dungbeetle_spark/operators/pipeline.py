@@ -25,6 +25,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from dungbeetle_spark.functions.texts import norm_text
+from dungbeetle_spark.planmode import (
+    materialize_concurrently,
+    maybe_count,
+    maybe_local_checkpoint,
+)
 from dungbeetle_spark.queries import _t, query
 
 _CC_MAX_ITERS = 20
@@ -966,54 +971,6 @@ def corpus_fate_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fate_frame(_t(spark, sf_dir, "documents")["documents"])
 
 
-# ADVICE r14 (medium): plan-only construction mode — see
-# dungbeetle_spark.planmode (re-exported here because the fate family
-# lives in this module and callers/tests reach it via pipeline).
-from dungbeetle_spark.planmode import (  # noqa: F401
-    is_plan_only as _is_plan_only,
-    maybe_local_checkpoint as _maybe_ckpt,
-    plan_only,
-)
-
-
-def _materialize_concurrently(session, *thunks):
-    """Run independent materialization thunks on concurrent driver
-    threads and return their results in order (guide §2.6 — Spark's
-    scheduler happily overlaps independent jobs; FAIR mode is already
-    on, so the chains back-fill each other's stragglers). Threads are
-    wrapped with ``inheritable_thread_target`` so JVM thread-locals —
-    job group (A13/A19 cancellation!), description, scheduler pool —
-    propagate from the caller, exactly as the job layer requires."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    # Plan-only construction (ADVICE r14): contextvars do NOT
-    # propagate to pool threads, so a threaded thunk would read
-    # plan_only() as False and eagerly materialize — run thunks
-    # sequentially on the caller thread instead (construction is
-    # job-free in this mode by design, so there is nothing to
-    # overlap).
-    if _is_plan_only():
-        return [t() for t in thunks]
-
-    deco = inheritable_thread_target(session)
-    # Non-pinned mode (PYSPARK_PIN_THREAD=false) makes
-    # inheritable_thread_target return its argument unchanged — the
-    # SESSION, not a decorator. Without pinning, JVM thread-locals (job
-    # group, scheduler pool) are NOT isolated per Python thread, so
-    # concurrent builds could bleed job groups into each other and a
-    # cancellation could hit the wrong in-flight build (ADVICE r14) —
-    # degrade to SEQUENTIAL execution on the caller thread instead.
-    if not callable(deco) or deco is session:
-        return [t() for t in thunks]
-
-    if len(thunks) == 1:
-        return [thunks[0]()]
-    with ThreadPoolExecutor(len(thunks)) as ex:
-        return list(ex.map(lambda t: t(), [deco(t) for t in thunks]))
-
-
 def _fate_frame(d: DataFrame) -> DataFrame:
     """The composed fate pipeline over an arbitrary documents frame
     (doc_id, text, lang, ...) — extracted r10 so shard_export_diff can
@@ -1063,10 +1020,6 @@ def _fate_frame(d: DataFrame) -> DataFrame:
       (guide §3.3 — explode multiplies the join; at 100 TB surv2
       outgrows any broadcast and the pre-explode join avoids a
       gram-grain shuffle entirely).
-    - plan-only consumers (``plan_only()`` — the explain endpoint,
-      plan audits) get a fully LAZY construction: no eager
-      checkpoints, no counts, no Spark jobs before the first action
-      (ADVICE r14).
     """
     from dungbeetle_spark.functions.texts import content_md5
     from dungbeetle_spark.operators.mixing import (
@@ -1103,17 +1056,14 @@ def _fate_frame(d: DataFrame) -> DataFrame:
     )
     fsh = _fdc_shingle_hashes(_fdc_seeded(base))
     fstops = _fdc_stop_set(fsh, d)
-    if _is_plan_only():
-        flags, ev = flags_lazy, ev_lazy
-    else:
-        # overlap the three independent reference builds; forcing
-        # fstops also materializes fsh's lazy checkpoint (its parent)
-        flags, ev, _ = _materialize_concurrently(
-            d.sparkSession,
-            lambda: flags_lazy.localCheckpoint(),
-            lambda: ev_lazy.localCheckpoint(),
-            lambda: fstops.count(),
-        )
+    # overlap the three independent reference builds; forcing fstops
+    # also materializes fsh's lazy checkpoint (its parent)
+    flags, ev, _ = materialize_concurrently(
+        d.sparkSession,
+        lambda: maybe_local_checkpoint(flags_lazy),
+        lambda: maybe_local_checkpoint(ev_lazy),
+        lambda: maybe_count(fstops),
+    )
     # r15: election folded into a conditional-min window — one h-keyed
     # exchange, no join back on doc_id (see docstring).
     surv = ~F.col("is_eval") & (F.col("reason") == "kept")
@@ -1124,7 +1074,7 @@ def _fate_frame(d: DataFrame) -> DataFrame:
             F.min(F.when(surv, F.col("doc_id"))).over(W.partitionBy("h")),
         ),
     )
-    fw = _maybe_ckpt(fw, eager=False)  # many consumers below; lazy barrier
+    fw = maybe_local_checkpoint(fw, eager=False)  # many consumers; lazy barrier
     surv2 = fw.filter(F.col("doc_id") == F.col("dup_of")).select("doc_id")
     cont = (
         toks.join(surv2, "doc_id")  # join BEFORE the explode (r15):
@@ -1136,7 +1086,7 @@ def _fate_frame(d: DataFrame) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.when(F.col("hit").isNotNull(), 1)).alias("n_cont"))
     )
-    cont = _maybe_ckpt(cont, eager=False)  # feeds surv3 + final assembly
+    cont = maybe_local_checkpoint(cont, eager=False)  # feeds surv3 + assembly
     # fuzzy decontamination among the exact-decon survivors (r12): the
     # standalone fuzzy_decontamination pipeline, with the probe side
     # restricted to surv3 — the only docs whose fuzzy verdict the fate
@@ -1165,7 +1115,7 @@ def _fate_frame(d: DataFrame) -> DataFrame:
         fsh.join(need, "doc_id", "left_semi")
         .join(F.broadcast(fstops), "hs", "left_anti")
     )
-    fbands = _fdc_band_rows(_maybe_ckpt(fmh, eager=False))
+    fbands = _fdc_band_rows(maybe_local_checkpoint(fmh, eager=False))
     fev = fbands.filter(F.col("doc_id") % _EVAL_MOD == 0).select(
         F.col("doc_id").alias("eval_doc"), "j", "h"
     )
@@ -1572,7 +1522,7 @@ def shard_export_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # their reference-chain materializations overlap instead of
     # running back-to-back; the diff action then interleaves both
     # export aggregates' stages inside one job.
-    prev, curr = _materialize_concurrently(
+    prev, curr = materialize_concurrently(
         spark,
         lambda: _export_frame(d),
         lambda: _export_frame(_evolved_docs(d)),
@@ -1797,7 +1747,7 @@ def release_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-replay fixture shape), but execution materializes the fate
     assembly once."""
     d = _t(spark, sf_dir, "documents")["documents"]
-    fate = _maybe_ckpt(_fate_frame(d), eager=False)
+    fate = maybe_local_checkpoint(_fate_frame(d), eager=False)
     return _datacard_frame(d, fate)
 
 

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from dungbeetle_spark.planmode import maybe_local_checkpoint
+
 _AUX = ("_pid", "_lr", "_off", "_n", "_r", "_q", "_rem")
 
 
@@ -61,7 +63,7 @@ def global_ntile(
         # lazy: materializes once at the first action and is reused by
         # both consumers (same single-evaluation guarantee as eager,
         # without spending a separate job on it before the real one)
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     wl = W.partitionBy("_pid").orderBy(*order_by)
     local = ranged.withColumn("_lr", F.row_number().over(wl).cast("long"))
@@ -116,7 +118,7 @@ def global_cumsum(
     ranged = (
         df.repartitionByRange(n_parts, *order_by)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     hi = -1 if exclusive else 0
     wl = (

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from dungbeetle_spark.functions.texts import md5_hash60_sql
-from dungbeetle_spark.planmode import maybe_local_checkpoint
+from dungbeetle_spark.planmode import materialize_concurrently, maybe_local_checkpoint
 from dungbeetle_spark.queries import _t, query
 from dungbeetle_spark.sources.catalog import fan_out
 
@@ -1212,7 +1212,7 @@ def embedding_drift_by_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("label", "epoch", "dim")
         .agg(F.sum("qv").alias("s"), F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     a, b = cent.alias("a"), cent.alias("b")
     pairs = (
@@ -1325,11 +1325,6 @@ def ann_recall_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pulls, the exact sweep's materialization) — so the arms build on
     # concurrent driver threads and their jobs overlap instead of
     # running as three sequential phases.
-    from dungbeetle_spark.operators.pipeline import (
-        _is_plan_only,
-        _materialize_concurrently,
-    )
-
     # r15 (VERDICT r14 item 4): ONE driver pull covers the query
     # vectors and the IVF centroids — the three arms used to run
     # three separate driver-blocking toPandas jobs over overlapping
@@ -1345,33 +1340,20 @@ def ann_recall_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     qpd = head[head["vec_id"] < _N_QUERIES].reset_index(drop=True)
     cpd = head[head["vec_id"] >= _N_QUERIES].reset_index(drop=True)
 
-    if _is_plan_only():
-        # ADVICE r14: plan inspection skips the exact arm's eager
-        # materialization (the one bounded head pull above still runs
-        # — it defines the probe frames).
-        exact = maybe_local_checkpoint(
+    exact, lsh, ivf = materialize_concurrently(
+        spark,
+        lambda: maybe_local_checkpoint(
             ann_cosine_topk(spark, sf_dir, _qpd=qpd).select(
                 "query_id", "neighbor_id"
-            ),
-            eager=False,
-        )
-        lsh = ann_lsh_bucketed(spark, sf_dir).select("query_id", "neighbor_id")
-        ivf = ann_ivf(spark, sf_dir, _cpd=cpd, _qpd=qpd).select(
+            )
+        ),
+        lambda: ann_lsh_bucketed(spark, sf_dir).select(
             "query_id", "neighbor_id"
-        )
-    else:
-        exact, lsh, ivf = _materialize_concurrently(
-            spark,
-            lambda: ann_cosine_topk(spark, sf_dir, _qpd=qpd)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint(),
-            lambda: ann_lsh_bucketed(spark, sf_dir).select(
-                "query_id", "neighbor_id"
-            ),
-            lambda: ann_ivf(spark, sf_dir, _cpd=cpd, _qpd=qpd).select(
-                "query_id", "neighbor_id"
-            ),
-        )
+        ),
+        lambda: ann_ivf(spark, sf_dir, _cpd=cpd, _qpd=qpd).select(
+            "query_id", "neighbor_id"
+        ),
+    )
     base = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
     lh = (
         exact.join(lsh, ["query_id", "neighbor_id"])
@@ -1657,7 +1639,7 @@ def embedding_outlier_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Narrow (4 cols) and consumed twice (percentile fence + final
         # rollup): lazily checkpoint so the scan→explode→sum→score
         # pipeline runs ONCE, not once per consumer.
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     scored.createOrReplaceTempView("_emb_outlier_scored")
     thr = spark.sql(

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from dungbeetle_spark.functions.texts import content_md5, norm_text, word_count
+from dungbeetle_spark.planmode import maybe_local_checkpoint
 from dungbeetle_spark.queries import _t, query
 from dungbeetle_spark.sources.catalog import fan_out
 
@@ -1323,7 +1324,7 @@ def token_freq_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_types"),
             F.sum("cnt").cast("long").alias("n_tokens"),
         )
-        .localCheckpoint(eager=False)
+        .transform(maybe_local_checkpoint, eager=False)
     )
     tot = spec.groupBy("source").agg(
         F.sum("n_types").alias("v"), F.sum("n_tokens").alias("t")
@@ -2076,8 +2077,8 @@ def quality_gate_shadow_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when((F.col("lang") == "en") & (stp < _QF_MIN_STOP), "low_stopword")
         .otherwise("kept")
     )
-    v = stats.select("source", r1.alias("r1"), r2.alias("r2")).localCheckpoint(
-        eager=False
+    v = maybe_local_checkpoint(
+        stats.select("source", r1.alias("r1"), r2.alias("r2")), eager=False
     )  # two consumers: confusion rollup + new-reason mode
     agg = v.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2312,7 +2313,7 @@ def bpe_compression_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", toks)
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)  # vocab derivation + final join
+        .transform(maybe_local_checkpoint, eager=False)  # vocab derivation + final join
     )
     vocab = occ.select("word").distinct().withColumn(
         "sym", F.concat(F.lit(" "), F.regexp_replace("word", "(.)", "$1 "))
@@ -2399,7 +2400,8 @@ def lang_label_noise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             _lang_guess_spark().alias("guessed_lang"),
         )
         .join(base.select("doc_id", "source"), "doc_id")
-        .localCheckpoint(eager=False)  # agreement rollup + mislabel mode
+        # agreement rollup + mislabel mode
+        .transform(maybe_local_checkpoint, eager=False)
     )
     agg = g.groupBy("source", "labeled_lang").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -41,10 +41,12 @@ import os
 import tempfile
 import threading
 import time
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dungbeetle_spark.planmode import materialize_concurrently, maybe_local_checkpoint
 from dungbeetle_spark.queries import _t, query
 
 # -- job-layer materialization ------------------------------------------------
@@ -63,6 +65,11 @@ _KEY_LOCKS: dict[tuple[str, str], threading.Lock] = {}
 # manifest-scale parquet under /tmp (ADVICE r13).
 _OWNED_DIRS: list[str] = []
 _JOB_TIMEOUT_SEC = 900.0
+# session -> {key: (path, DataFrame read of path)}. ``spark.read.parquet``
+# runs a schema-inference job on every call, so each session keeps its
+# read of the current path, as ``catalog.load_tables`` does; the key
+# includes the session because ``Core`` hands builders child sessions.
+_READS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 @atexit.register
@@ -125,9 +132,9 @@ def _result_table(
     bench/driver runs over immutable fixture dirs, stale the moment
     the corpus under sf_dir changes (a rollover). ``refresh=True`` is
     the invalidation hatch: it rebuilds through the job layer and
-    repoints the cache; DataFrames handed out against the old path
-    stay readable until process exit (the old dir is reaped then, not
-    at repoint)."""
+    repoints the cache, path and per-session read alike; DataFrames
+    handed out against the old path stay readable until process exit
+    (the old dir is reaped then, not at repoint)."""
     key = (os.path.realpath(sf_dir), name)
     with _REG_LOCK:
         lock = _KEY_LOCKS.setdefault(key, threading.Lock())
@@ -138,7 +145,15 @@ def _result_table(
             path = _materialize(spark, sf_dir, name, build)
             with _REG_LOCK:
                 _MATERIALIZED[key] = path
-    return spark.read.parquet(path)
+    with _REG_LOCK:
+        reads = _READS.setdefault(spark, {})
+        hit = reads.get(key)
+    if hit is not None and hit[0] == path:
+        return hit[1]
+    df = spark.read.parquet(path)
+    with _REG_LOCK:
+        reads[key] = (path, df)
+    return df
 
 
 def result_table_path(sf_dir: str, name: str) -> str:
@@ -338,9 +353,7 @@ def fate_reference_tables(
     built exactly once); only the band index waits on the stop set it
     chains from. Cached-path calls skip the pool's thunks in
     microseconds."""
-    from dungbeetle_spark.operators.pipeline import _materialize_concurrently
-
-    canon, ev, fstops = _materialize_concurrently(
+    canon, ev, fstops = materialize_concurrently(
         sess,
         lambda: _result_table(
             sess, sf_dir, "fate_ref_canon", _canon_frame, refresh=refresh
@@ -626,7 +639,6 @@ def release_datacard_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         _datacard_frame,
         _evolved_docs,
         _fate_frame,
-        _maybe_ckpt,
     )
 
     d = _docs(spark, sf_dir)
@@ -636,7 +648,7 @@ def release_datacard_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both the fate rollup and the kept membership, so the evolved
     # fate assembly materializes once (release_datacard's own pin)
     curr = _datacard_frame(
-        ev, _maybe_ckpt(_fate_frame(ev), eager=False)
+        ev, maybe_local_checkpoint(_fate_frame(ev), eager=False)
     ).alias("c")
     z = F.lit(0)
     return prev.join(

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dungbeetle_spark.planmode import is_plan_only
+
 # The driver's synthetic star schema (TESTDATA.md).
 TABLES = (
     "region",
@@ -146,8 +148,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     Catalyst never asked for; the spread shuffle exists solely to
     rescue unsplittable single-row-group files in local runs.
     """
-    from dungbeetle_spark.planmode import is_plan_only
-
     if is_plan_only():
         # Plan inspection (ADVICE r14): the split probe below calls
         # df.rdd.getNumPartitions(), and when df already contains a

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dungbeetle_spark.functions.numeric import dsum
+from dungbeetle_spark.planmode import maybe_local_checkpoint
 from dungbeetle_spark.queries import _t, query
 from dungbeetle_spark.streaming.source import drain_to_df, stream_events
 
@@ -418,7 +419,7 @@ def streaming_minhash_ingest_gate(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .groupBy("band", "h")
         .agg(F.min("doc_id").alias("leader"))
-        .localCheckpoint()
+        .transform(maybe_local_checkpoint)
     )
 
     def gate_batch(bdf: DataFrame) -> DataFrame:
@@ -757,7 +758,7 @@ def streaming_fuzzy_decon_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     audit = stops.agg(
         F.count(F.lit(1)).cast("long").alias("stop_shingles")
-    ).localCheckpoint()
+    ).transform(maybe_local_checkpoint)
 
     def gate_batch(bdf: DataFrame) -> DataFrame:
         # batch-local throughout: every doc's hs rows derive from its

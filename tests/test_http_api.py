@@ -294,3 +294,22 @@ def test_registry_callable_task_served_over_http(server, client, sf_smoke):
     out = core.read_result("http_reg1")
     assert st["count"] == out.count() > 0
     assert "doc_id" in out.columns
+
+
+def test_explain_registry_task_submits_no_spark_job(server, client, sf_smoke):
+    """``GET /tasks/{t}/explain`` builds under plan_only(): once the
+    source tables are open, explaining a registry operator whose build
+    checkpoints (rfm_segments) prints its plan without a Spark job."""
+    from dungbeetle_spark.queries import registry
+
+    core = server.httpd.RequestHandlerClass.core
+    spec = registry()["rfm_segments"]
+    core.register_callable_task(
+        "op_rfm_segments", lambda sess, args: spec.build(sess, sf_smoke)
+    )
+    client.explain("op_rfm_segments")  # opens the source tables
+    tracker = core.spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = client.explain("op_rfm_segments")
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert "Physical Plan" in out["plan"]

@@ -10,6 +10,7 @@ the reference has — the canonical-cast schema of a results table
 from __future__ import annotations
 
 import dataclasses
+import threading
 import time
 
 import pytest
@@ -147,6 +148,44 @@ def test_cancel_running_job(core):
     core.cancel_job("doomed")  # interrupts the Spark job group
     with pytest.raises(KeyError):
         core.job_status("doomed")  # deleted from the store (core.go:243-271)
+
+
+def test_cancel_during_build_stops_the_build_job(spark, tmp_path_factory):
+    """A builder's own Spark jobs (barriers, driver pulls) run in the
+    job's group, so ``cancel_job`` interrupts them too: the build ends
+    within ~2 s of the cancel, and no result table is written."""
+    c = Core(spark, worker_concurrency=1)
+    res_dir = tmp_path_factory.mktemp("build_cancel_res")
+    c.add_result_backend("default", str(res_dir))
+    started, ended = threading.Event(), threading.Event()
+
+    def slow_build(sess, args):
+        started.set()
+        try:
+            sess.sql(
+                "SELECT reflect('java.lang.Thread', 'sleep', 5000L) AS slept"
+            ).collect()
+        finally:
+            ended.set()
+        return sess.range(3)
+
+    c.register_callable_task("slow_build", slow_build)
+    c.start()
+    try:
+        c.new_job("slow_build", JobReq(job_id="build_doomed"))
+        assert started.wait(30)
+        tracker = spark.sparkContext.statusTracker()
+        deadline = time.monotonic() + 10
+        while not tracker.getActiveJobsIds() and time.monotonic() < deadline:
+            time.sleep(0.05)
+        time.sleep(0.3)  # the sleep task is running
+        c.cancel_job("build_doomed")
+        assert ended.wait(2.5), "the build's Spark job outlived the cancel"
+        with pytest.raises(KeyError):
+            c.job_status("build_doomed")
+    finally:
+        c.stop()  # waits for the worker to unwind the cancelled job
+    assert not any(res_dir.iterdir()), list(res_dir.iterdir())
 
 
 def test_cancel_completed_requires_purge(core):

@@ -1722,29 +1722,108 @@ def test_top_cost_diagnostics_no_cartesian_no_global_window(spark, sf):
             name, shuffle_exchanges(df))
 
 
-def test_plan_only_constructs_fate_frame_without_spark_jobs(spark, sf):
-    """ADVICE r14 (medium): the explain endpoint must not launch
-    corpus-scale jobs to print a plan. Under plan_only() the fate
-    family constructs fully lazy frames — building the composed
-    manifest and rendering its formatted plan submits ZERO Spark jobs
-    (the eager reference materializations and driver counts are the
-    execution path's concern)."""
-    from dungbeetle_spark.operators.pipeline import plan_only
-    from dungbeetle_spark.queries import _t
+# Registry queries whose build still submits Spark jobs under
+# plan_only(), each with its category (the four planmode's docstring
+# names) and reason. Every other query builds and renders its plan
+# with zero Spark jobs.
+_WAREHOUSE = "warehouse table"
+_LOOP = "action-driven loop"
+_PULL = "driver pull"
+_STREAM = "streaming drain"
+_PLAN_ONLY_JOBS = {
+    **{
+        name: (_WAREHOUSE, "reads job-layer result tables, materialized on first use")
+        for name in (
+            "shard_export_from_manifest",
+            "pii_audit_from_manifest",
+            "release_datacard_from_manifest",
+            "shard_export_diff_from_manifest",
+            "fate_churn_summary",
+            "release_datacard_diff",
+            "fate_recompute_plan",
+            "fate_reference_maintenance",
+            "fate_apply_plan",
+            "fate_deploy_cycle",
+            "shard_export_diff_delta",
+            "shard_export_apply_delta",
+            "shard_export_diff_shipped",
+            "canon_map_maintenance",
+        )
+    },
+    **{
+        name: (_LOOP, "connected_components stops when a round changes no label")
+        for name in (
+            "dedup_components",
+            "dedup_canonical_keep",
+            "dedup_cluster_histogram",
+        )
+    },
+    **{
+        name: (_LOOP, "_bpe_learn picks each merge from the counted pairs")
+        for name in ("bpe_merge_ranks", "bpe_compression_by_source")
+    },
+    "ann_cosine_topk": (_PULL, "query vectors become literals"),
+    "ann_ivf": (_PULL, "centroids and query vectors become literals"),
+    "ann_pq": (_PULL, "codebook and query vectors become literals"),
+    "ann_recall_calibration": (
+        _PULL,
+        "one bounded head pull: query vectors and IVF centroids",
+    ),
+    "dedup_embedding_cosine": (
+        _PULL,
+        "the exact sweep's closure carries the corpus matrix",
+    ),
+    "semdedup": (_PULL, "centroids become literals"),
+    "kmeans_clusters": (_PULL, "seeds and the refined centroids become literals"),
+    **{
+        name: (_STREAM, "the build drains the stream into a frame")
+        for name in (
+            "streaming_sessionize",
+            "streaming_segment_volume",
+            "streaming_stream_stream_join",
+            "streaming_distinct_daily",
+            "streaming_minhash_ingest_gate",
+            "streaming_corpus_fate_gate",
+            "streaming_fuzzy_decon_gate",
+            "streaming_pii_redaction_gate",
+            "streaming_fate_gate_rollover",
+            "streaming_incremental_mv",
+            "streaming_hll_registers",
+            "streaming_windowed_counts",
+            "streaming_quality_filter",
+        )
+    },
+}
 
-    _t(spark, sf, "documents")  # session-scoped table load, one job
+
+def test_plan_only_constructs_fate_frame_without_spark_jobs(spark, sf_smoke):
+    """The explain endpoint must not run Spark jobs to print a plan.
+    With the tables loaded once, building every registry query under
+    plan_only() and rendering its formatted plan submits ZERO Spark
+    jobs, except the allowlisted queries above. The two-replay
+    shard_export_diff exercises the threaded materialize_concurrently
+    path: contextvars do not propagate to pool threads, so it runs its
+    thunks inline under plan_only()."""
+    from dungbeetle_spark.planmode import plan_only
+    from dungbeetle_spark.sources.catalog import TABLES, load_tables
+
+    assert set(_PLAN_ONLY_JOBS) <= set(SPECS)
+    load_tables(spark, sf_smoke, TABLES)  # one schema job per table
     tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    with plan_only():
-        df = _df(spark, sf, "corpus_fate_manifest")
-        plan = formatted_plan(df)
-        # the two-replay diff exercises the THREADED
-        # _materialize_concurrently path — contextvars do not
-        # propagate to pool threads, so the helper must run thunks
-        # sequentially under plan_only (r15 review finding)
-        formatted_plan(_df(spark, sf, "shard_export_diff"))
-    after = set(tracker.getJobIdsForGroup(None))
-    assert after == before, "plan_only construction submitted Spark jobs"
+    offenders = {}
+    for name, spec in SPECS.items():
+        if name in _PLAN_ONLY_JOBS:
+            continue
+        before = set(tracker.getJobIdsForGroup(None))
+        with plan_only():
+            built = spec.build(spark, sf_smoke)
+            built_plan = formatted_plan(built)
+        new = set(tracker.getJobIdsForGroup(None)) - before
+        if new:
+            offenders[name] = len(new)
+        if name == "corpus_fate_manifest":
+            df, plan = built, built_plan
+    assert not offenders, f"plan_only construction submitted Spark jobs: {offenders}"
     # the lazy construction still yields the real manifest schema and
     # a plan with the full visible lineage (no checkpoint truncation)
     assert [f.name for f in df.schema.fields] == [
@@ -1764,7 +1843,7 @@ def test_plan_only_ann_recall_calibration_runs_only_the_head_pull(spark, sf):
     below it under AQE), so building the composed frame and rendering
     its plan submits at most the one bounded head pull that defines
     the probe frames."""
-    from dungbeetle_spark.operators.pipeline import plan_only
+    from dungbeetle_spark.planmode import plan_only
     from dungbeetle_spark.queries import _t
 
     _t(spark, sf, "embeddings")  # session-scoped table load
@@ -1774,3 +1853,53 @@ def test_plan_only_ann_recall_calibration_runs_only_the_head_pull(spark, sf):
         formatted_plan(_df(spark, sf, "ann_recall_calibration"))
     new_jobs = set(tracker.getJobIdsForGroup(None)) - before
     assert len(new_jobs) <= 1, sorted(new_jobs)
+
+
+def test_build_time_barriers_go_through_planmode():
+    """planmode owns the barrier policy: outside it there is no raw
+    ``.localCheckpoint(`` except in the action-driven loops below, and
+    nothing but ``sources.catalog.fan_out`` reads plan-only mode."""
+    import ast
+    import pathlib
+
+    import dungbeetle_spark
+
+    # (module, function) -> why its checkpoints stay raw under plan_only()
+    raw_checkpoint_loops = {
+        ("operators/pipeline.py", "connected_components"): (
+            "an isEmpty() per round decides convergence; each round's "
+            "checkpoint truncates the lineage the next round re-reads"
+        ),
+        ("operators/text.py", "_bpe_learn"): (
+            "the distributed loop collects each round's best pair; each "
+            "round's checkpoint truncates the lineage of the rewritten symbols"
+        ),
+    }
+    mode_readers = {("sources/catalog.py", "fan_out")}
+    mode_names = {"is_plan_only", "_PLAN_ONLY"}
+    pkg = pathlib.Path(dungbeetle_spark.__file__).parent
+    raw, readers = set(), set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "planmode.py":
+            continue
+
+        def walk(node, fn, rel=rel):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                fn = node.name  # the innermost enclosing function
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            ):
+                raw.add((rel, fn))
+            if (isinstance(node, ast.Name) and node.id in mode_names) or (
+                isinstance(node, ast.Attribute) and node.attr in mode_names
+            ):
+                readers.add((rel, fn))
+            for child in ast.iter_child_nodes(node):
+                walk(child, fn)
+
+        walk(ast.parse(path.read_text()), None)
+    assert raw <= set(raw_checkpoint_loops), sorted(raw - set(raw_checkpoint_loops))
+    assert readers <= mode_readers, sorted(readers - mode_readers)

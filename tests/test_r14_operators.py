@@ -40,14 +40,26 @@ def test_refresh_rebuilds_and_repoints_cache(spark, sf_smoke):
     key = (os.path.realpath(sf_smoke), "corpus_fate_manifest")
     first = W.manifest_table(spark, sf_smoke)
     path1 = W._MATERIALIZED[key]
-    # default: process-lifetime cache — same path, no rebuild
-    W.manifest_table(spark, sf_smoke)
+    # default: process-lifetime cache — same path, no rebuild, and the
+    # session's read is memoized: a warm call submits no Spark job
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    assert W.manifest_table(spark, sf_smoke) is first
+    assert set(tracker.getJobIdsForGroup(None)) == before
     assert W._MATERIALIZED[key] == path1
+    # a child session (Core hands builders one) reads on its own
+    child = spark.newSession()
+    assert W.manifest_table(child, sf_smoke) is not first
     # refresh=True is the rollover hatch: a NEW job-layer build at a
-    # NEW path, cache repointed...
+    # NEW path, cache repointed — path and every session's read...
     refreshed = W.manifest_table(spark, sf_smoke, refresh=True)
     path2 = W._MATERIALIZED[key]
     assert path2 != path1
+    assert refreshed is not first
+    assert W.manifest_table(spark, sf_smoke) is refreshed
+    assert all(
+        path2 in f for f in W.manifest_table(child, sf_smoke).inputFiles()
+    )
     # ...with identical content over an unchanged corpus, and the
     # pre-refresh DataFrame still readable (old dir reaped at process
     # exit, not at repoint)
@@ -676,10 +688,10 @@ def test_materialize_concurrently_non_pinned_fallback(spark, monkeypatch):
     could bleed job groups); same guard in bench._materialize_tables."""
     import pyspark
 
-    from dungbeetle_spark.operators import pipeline as P
+    from dungbeetle_spark.planmode import materialize_concurrently
 
     monkeypatch.setattr(
         pyspark, "inheritable_thread_target", lambda session: session
     )
-    out = P._materialize_concurrently(spark, lambda: 1, lambda: 2, lambda: 3)
+    out = materialize_concurrently(spark, lambda: 1, lambda: 2, lambda: 3)
     assert out == [1, 2, 3]
